@@ -411,29 +411,31 @@ def dedupe_members(
         return _star_members(sig, cfg)
     assert cfg.grouping == "cc", f"unknown grouping {cfg.grouping!r}"
 
-    caches: list[DataFrame] = []
-    sig = sig.persist()  # scanned by reps, band passes, and final expansion
-    sig.count()  # eager (concurrent-stage cache-race guard, see lsh.py)
-    reps = sha_representatives(sig).persist()
-    doc_rep = doc_rep_map(sig, reps).persist()
-    caches += [sig, reps, doc_rep]
-    edges = rep_edges(
-        all_candidate_edges(
-            sig, cfg, corpus=corpus, reps=reps, doc_rep=doc_rep, caches=caches
-        ),
-        doc_rep,
-    )
     from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
 
     spark = sig.sparkSession
-    pre_cc = persistent_rdd_ids(spark)
-    comps = connected_components(edges)
-    cc_ids = persistent_rdd_ids(spark) - pre_cc  # CC's final checkpoint
-    members = assign_clusters(sig, doc_rep, comps).localCheckpoint(eager=True)
-    release_rdd_ids(spark, cc_ids)  # members is materialized; comps is dead
-    for c in caches:
-        c.unpersist()
-    return members
+    caches: list[DataFrame] = [sig.persist()]  # scanned by reps, bands, expansion
+    try:
+        sig.count()  # eager (concurrent-stage cache-race guard, see lsh.py)
+        reps = sha_representatives(sig).persist()
+        doc_rep = doc_rep_map(sig, reps).persist()
+        caches += [reps, doc_rep]
+        edges = rep_edges(
+            all_candidate_edges(
+                sig, cfg, corpus=corpus, reps=reps, doc_rep=doc_rep, caches=caches
+            ),
+            doc_rep,
+        )
+        pre_cc = persistent_rdd_ids(spark)
+        comps = connected_components(edges)
+        cc_ids = persistent_rdd_ids(spark) - pre_cc  # CC's final checkpoint
+        members = assign_clusters(sig, doc_rep, comps).localCheckpoint(eager=True)
+        release_rdd_ids(spark, cc_ids)  # members is materialized; comps is dead
+        return members
+    finally:
+        # also on an error: a failed call must not pin executor storage
+        for c in caches:
+            c.unpersist()
 
 
 def _star_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:

@@ -66,9 +66,10 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row.n), int(row.h)
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, _stats: dict | None = None
-) -> DataFrame:
+MAX_ROUNDS = 50  # O(log n) in practice; hitting it means a bug, so it raises
+
+
+def connected_components(edges: DataFrame, _stats: dict | None = None) -> DataFrame:
     """Edges (src, dst) -> labels (doc_id, cluster_id) for every node that
     appears in an edge; cluster_id = min doc_id of the component
     (deterministic across runs and parallelism levels).
@@ -95,7 +96,7 @@ def connected_components(
     # one extra (cheap, small-table) round, every other input saves a job.
     prev_sum = None
     prev_ids = persistent_rdd_ids(spark) - before
-    for it in range(max_iter):
+    for it in range(MAX_ROUNDS):
         before = persistent_rdd_ids(spark)
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         cur_sum = _checksum(cur)
@@ -109,7 +110,7 @@ def connected_components(
             break
         prev_sum = cur_sum
     else:
-        raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
+        raise RuntimeError(f"connected_components: no convergence in {MAX_ROUNDS} rounds")
 
     # converged star edges point child -> root (src > dst, dst is the min)
     members = cur.select(F.col("src").alias("doc_id"), F.col("dst").alias("cluster_id"))

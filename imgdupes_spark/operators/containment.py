@@ -133,7 +133,7 @@ def containment_edges(
     # window over that relation — r6 shaped this as groupBy(key) + join
     # back, which exchanged the corpus-wide exploded table twice more
     # (guide §2.4: two operations keyed the same way share one exchange;
-    # same device as lsh._pairs_from_bands' bucket sizes). ``is_short``
+    # same device as lsh.bucket_pairs' bucket sizes). ``is_short``
     # marks contained-side eligibility for kind 1.
     ex_parts = [
         docs.filter(long_d).select(

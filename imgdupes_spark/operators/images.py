@@ -36,7 +36,7 @@ def perceptual_hash_dedup(
     """
     from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
     from imgdupes_spark.operators.components import connected_components
-    from imgdupes_spark.operators.lsh import simhash_candidate_edges
+    from imgdupes_spark.operators.lsh import lsh_candidate_edges
 
     spark = feats.sparkSession
     # NULL hashes are quarantined assets (decode failures under
@@ -47,7 +47,7 @@ def perceptual_hash_dedup(
     )
     caches: list[DataFrame] = []
     try:
-        edges = simhash_candidate_edges(sig, cfg, caches)
+        edges = lsh_candidate_edges(sig, cfg, caches, ("simhash",))
         pre_cc = persistent_rdd_ids(spark)
         comps = connected_components(edges.select("src", "dst"))
         cc_ids = persistent_rdd_ids(spark) - pre_cc

@@ -10,7 +10,7 @@ recall < 1 by design, bounded by the number of probe buckets.
 
 embedding_dedup is the all-pairs analogue (the text pipeline's near-dup pass
 over an embedding column): RP buckets -> the SAME salted bucket self-join
-the text LSH uses (operators/lsh._pairs_from_bands) -> exact cosine verify
+the text LSH uses (operators/lsh.bucket_pairs) -> exact cosine verify
 -> connected components. One candidate-generation engine, two modalities.
 """
 
@@ -560,7 +560,7 @@ def embedding_dedup(
     Hamming radius ``multiprobe`` (JVM bit flips) — two vectors collide when
     their expanded sets intersect, i.e. bucket Hamming <= 2*multiprobe in
     some table. The bucket table feeds the SAME salted self-join as the text
-    LSH (_pairs_from_bands: hot-bucket salting, 16-byte rows), then an exact
+    LSH (bucket_pairs: hot-bucket salting, 16-byte rows), then an exact
     cosine verify and connected components.
 
     Returns (vec_id, cluster_id, cluster_size) for multi-member clusters;
@@ -568,7 +568,7 @@ def embedding_dedup(
     effectively 1.0 for tau >= 0.9 at the default 4 bits x 16 tables."""
     from imgdupes_spark.config import DedupeConfig
     from imgdupes_spark.operators.components import connected_components
-    from imgdupes_spark.operators.lsh import _pairs_from_bands
+    from imgdupes_spark.operators.lsh import bucket_pairs
 
     cfg = DedupeConfig(max_bucket_size=max_bucket_size, salt_parts=salt_parts)
     buckets = make_rp_buckets_udf(dim, n_bits, n_tables)
@@ -586,10 +586,10 @@ def embedding_dedup(
     bands = bands.select("doc_id", F.col("b0").alias("bkey"))
 
     # thread a local caches list so the band table persisted inside
-    # _pairs_from_bands is drained after the result is materialized
+    # bucket_pairs is drained after the result is materialized
     # (caches=None would leak it for the session — round-2 verdict item 2)
     caches: list[DataFrame] = []
-    pairs = _pairs_from_bands(bands, None, cfg, caches).dropDuplicates(["src", "dst"])
+    pairs = bucket_pairs(bands, cfg, caches).dropDuplicates(["src", "dst"])
     edges = (
         pairs.join(vecs.select(F.col("doc_id").alias("src"), F.col("v").alias("sv")), ["src"])
         .join(vecs.select(F.col("doc_id").alias("dst"), F.col("v").alias("dv")), ["dst"])

@@ -6,14 +6,17 @@ probe per element (reference: common/imagededuper.py:174-236, :239-266,
 — "for each element, all neighbors within threshold" — is an *exact*
 distributed plan:
 
-  simhash path : multi-block combination keys over the 64-bit simhash (see
-                 simhash_bands — Manku et al. 2007): every pair within
-                 Hamming d shares at least one C(b, b-d) block-combination
-                 key, so a self-equi-join on (band_id, band_key) followed by
-                 the codegen'd verify filter ``bit_count(xor) <= d`` finds
-                 every in-threshold pair, exactly.
-  minhash path : classic MinHash LSH — xxhash64 over each band of the
-                 128-perm signature; verify by signature agreement >= tau.
+  simhash family : multi-block combination keys over the 64-bit simhash
+                   (Manku et al. 2007): every pair within Hamming d shares
+                   at least one C(b, b-d) block-combination key.
+  minhash family : classic MinHash LSH — one key per band of the 128-perm
+                   signature.
+
+ONE engine serves every LSH user (text dedupe, query probe, media, embedding
+dedup): band_keys hashes each (band, value) of the chosen families to one
+8-byte ``bkey``; bucket_pairs self-equi-joins the (doc_id, bkey) rows into
+candidate pairs; the codegen'd verify (hamming ``bit_count(xor) <= d``,
+jaccard_est signature agreement >= tau) keeps exactly the in-threshold pairs.
 
 Skew engineering (SURVEY.md §4, explicit per north_rule):
   1. exact pre-collapse — docs are first collapsed by sha256 to one
@@ -29,7 +32,10 @@ Skew engineering (SURVEY.md §4, explicit per north_rule):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from itertools import combinations
+from math import comb
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from imgdupes_spark.config import DedupeConfig
@@ -55,97 +61,52 @@ def rep_signatures(sig: DataFrame, reps: DataFrame) -> DataFrame:
     )
 
 
-def simhash_bands(rep_sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    """Explode each doc into (band_id, band_key) LSH rows over its simhash.
+FAMILIES = ("simhash", "minhash")
 
-    NOT single-block keys: a naive b-band scheme (b*r = 64, key = one r-bit
-    block) has only 2^r distinct keys per band, so uniformly-random
+
+def _family_key_exprs(cfg: DedupeConfig, family: str) -> list:
+    """Pre-hashed 8-byte band-key expressions of one family.
+
+    simhash: NOT single-block keys. A naive b-band scheme (b*r = 64, key =
+    one r-bit block) has only 2^r distinct keys per band, so uniformly-random
     fingerprints alone produce ~n^2/2^r candidate pairs — quadratic blowup
-    observed in practice at 10^5 docs and fatal at corpus scale.
+    observed in practice at 10^5 docs and fatal at corpus scale. Instead:
+    multi-block combination keys (the block-permutation idea of Manku, Jain &
+    Sarma, "Detecting Near-Duplicates for Web Crawling", WWW 2007,
+    re-expressed as a key explode + equi-join). Split the 64-bit simhash into
+    b blocks of r bits; a pair within Hamming distance d has differing bits
+    in at most d blocks, leaving >= b-d blocks identical — so keying every
+    doc by ALL C(b, b-d) block-combinations (each key = combo id + the b-d
+    concatenated block values, >= 32 bits of entropy for the default b=8,
+    d=4) guarantees every in-threshold pair collides in at least one combo,
+    while random collisions drop from n^2/2^8 to n^2/2^32.
 
-    Instead: multi-block combination keys (the block-permutation idea of
-    Manku, Jain & Sarma, "Detecting Near-Duplicates for Web Crawling",
-    WWW 2007, re-expressed as a key explode + equi-join). Split the 64-bit
-    simhash into b blocks of r bits; a pair within Hamming distance d has
-    differing bits in at most d blocks, leaving >= b-d blocks identical — so
-    keying every doc by ALL C(b, b-d) block-combinations (each key = combo id
-    + the b-d concatenated block values, >= 32 bits of entropy for the
-    default b=8, d=4) guarantees every in-threshold pair collides in at least
-    one combo, while random collisions drop from n^2/2^8 to n^2/2^32.
+    minhash: xxhash64 over each band's signature positions — element_at
+    extraction, NOT F.slice: the per-band array allocation of slice()
+    measured 3x slower at 54M band rows.
 
-    Rows keep (doc_id, simhash) so the verify filter needs no extra join.
+    Each key hashes its band number in with the value; the minhash band
+    numbers start after the C(b, b-d) simhash combos, so the two families'
+    keyspaces are disjoint whichever families are banded together.
     """
-    from itertools import combinations
-
     r = cfg.simhash_band_bits
-    mask = (1 << r) - 1
     m = cfg.simhash_bands - cfg.hamming_d  # blocks per combination key
-    assert m >= 1, "need hamming_d < simhash_bands"
-    blocks = [
-        (F.shiftrightunsigned(F.col("simhash"), r * i).bitwiseAND(F.lit(mask)))
-        for i in range(cfg.simhash_bands)
-    ]
-    keys = []
-    for combo in combinations(range(cfg.simhash_bands), m):
-        key = F.lit(0).cast("long")
-        for i in combo:
-            key = key * F.lit(mask + 1) + blocks[i]
-        keys.append(key)
-    return rep_sig.select(
-        "doc_id", "simhash", F.posexplode(F.array(*keys)).alias("band_id", "band_key")
-    )
-
-
-def minhash_bands(rep_sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    """MinHash LSH rows: band_key = xxhash64 over each band's signature
-    positions — element_at extraction, NOT F.slice: the per-band array
-    allocation of slice() measured 3x slower at 54M band rows.
-
-    Deliberately does NOT carry the 128-int signature through the explode:
-    a band table of n_docs x n_bands rows each lugging a ~550-byte array
-    turns the self-join into a multi-GB shuffle (measured 3x the cost of the
-    whole simhash pass at 400k docs). Pairs are generated on 16-byte key rows
-    and the signatures are re-joined only for the surviving candidate pairs.
-    """
-    rpb = cfg.minhash_rows_per_band
-    keys = F.array(
-        *[
-            F.xxhash64(
-                *[F.element_at(F.col("minhash"), i * rpb + j + 1) for j in range(rpb)]
-            )
-            for i in range(cfg.minhash_bands)
+    assert m >= 1, "pigeonhole guarantee requires cfg.hamming_d < cfg.simhash_bands"
+    if family == "simhash":
+        mask = (1 << r) - 1
+        blocks = [
+            F.shiftrightunsigned(F.col("simhash"), r * i).bitwiseAND(F.lit(mask))
+            for i in range(cfg.simhash_bands)
         ]
-    )
-    return rep_sig.select(
-        "doc_id", F.posexplode(keys).alias("band_id", "band_key")
-    )
-
-
-def _simhash_key_exprs(cfg: DedupeConfig, offset: int = 0) -> list:
-    """Pre-hashed 8-byte simhash combination-key expressions (one per
-    C(b, b-d) combo) — see simhash_band_keys."""
-    from itertools import combinations
-
-    r = cfg.simhash_band_bits
-    mask = (1 << r) - 1
-    m = cfg.simhash_bands - cfg.hamming_d
-    assert m >= 1, "need hamming_d < simhash_bands"
-    blocks = [
-        (F.shiftrightunsigned(F.col("simhash"), r * i).bitwiseAND(F.lit(mask)))
-        for i in range(cfg.simhash_bands)
-    ]
-    keys = []
-    for ci, combo in enumerate(combinations(range(cfg.simhash_bands), m)):
-        key = F.lit(0).cast("long")
-        for i in combo:
-            key = key * F.lit(mask + 1) + blocks[i]
-        keys.append(F.xxhash64(F.lit(offset + ci), key))
-    return keys
-
-
-def _minhash_key_exprs(cfg: DedupeConfig, offset: int = 0) -> list:
-    """Pre-hashed 8-byte minhash band-key expressions (element_at
-    extraction per minhash_bands)."""
+        keys = []
+        for ci, combo in enumerate(combinations(range(cfg.simhash_bands), m)):
+            key = F.lit(0).cast("long")
+            for i in combo:
+                key = key * F.lit(mask + 1) + blocks[i]
+            keys.append(F.xxhash64(F.lit(ci), key))
+        return keys
+    assert family == "minhash", f"unknown LSH family {family!r}"
+    offset = comb(cfg.simhash_bands, m)
     rpb = cfg.minhash_rows_per_band
     return [
         F.xxhash64(
@@ -156,45 +117,58 @@ def _minhash_key_exprs(cfg: DedupeConfig, offset: int = 0) -> list:
     ]
 
 
-def simhash_band_keys(rep_sig: DataFrame, cfg: DedupeConfig, offset: int = 0) -> DataFrame:
-    """(doc_id, bkey) simhash combination keys pre-hashed to ONE 8-byte
-    column inside the array — the hot-path variant of simhash_bands.
+def band_keys(df: DataFrame, cfg: DedupeConfig, families: tuple) -> DataFrame:
+    """(doc_id, bkey) LSH rows: every band key of every family in
+    ``families``, from ONE projection and ONE explode over the concatenated
+    key array (r7: the r6 union of per-family band tables scanned the rep_sig
+    cache once per family).
 
-    Two measured generation savings at 119M rows (1.7M docs, local[16]):
-    dropping the simhash payload column from the exploded rows 30.5s -> 17.3s,
-    and folding the (band_id, band_key) -> xxhash64 step into the array so the
-    explode emits final join keys 17.3s -> 16.2s. A bkey hash collision can
-    only merge two buckets (extra candidates, removed at verify) — never lose
-    a pair. ``offset`` keeps key families disjoint when unioned."""
-    return rep_sig.select(
-        "doc_id", F.explode(F.array(*_simhash_key_exprs(cfg, offset))).alias("bkey")
+    Each key is (band number, band value) pre-hashed to ONE 8-byte column
+    inside the array. Two measured generation savings at 119M rows (1.7M
+    docs, local[16]): dropping the simhash payload column from the exploded
+    rows 30.5s -> 17.3s, and folding the (band_id, band_key) -> xxhash64 step
+    into the array so the explode emits final join keys 17.3s -> 16.2s. A
+    bkey hash collision can only merge two buckets (extra candidates, removed
+    at verify) — never lose a pair.
+
+    Deliberately carries NO fingerprint: a band table of n_docs x n_bands
+    rows each lugging the ~550-byte minhash array turns the self-join into a
+    multi-GB shuffle (measured 3x the cost of the whole simhash pass at 400k
+    docs). Verify re-joins the fingerprints for the surviving pairs only.
+    """
+    keys = [k for f in families for k in _family_key_exprs(cfg, f)]
+    return df.select("doc_id", F.explode(F.array(*keys)).alias("bkey"))
+
+
+def hamming(a: Column, b: Column) -> Column:
+    """Simhash verify: 64-bit XOR + bit_count, pure JVM whole-stage codegen —
+    the Spark analogue of the reference's byte-packed vectors
+    (common/imagededuper.py:186; SURVEY.md §4 X4). The threshold is
+    inclusive per common/imagededuper.py:207."""
+    return F.bit_count(a.bitwiseXOR(b))
+
+
+def jaccard_est(a: Column, b: Column, cfg: DedupeConfig) -> Column:
+    """MinHash verify: the fraction of agreeing signature positions (the
+    standard MinHash estimator); tau is inclusive, mirroring the reference's
+    inclusive Hamming threshold."""
+    agree = F.aggregate(
+        F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, x: acc + x,
     )
+    return agree / F.lit(cfg.minhash_perms)
 
 
-def minhash_band_keys(rep_sig: DataFrame, cfg: DedupeConfig, offset: int = 0) -> DataFrame:
-    """(doc_id, bkey) minhash band keys, pre-hashed (see simhash_band_keys)."""
-    return rep_sig.select(
-        "doc_id", F.explode(F.array(*_minhash_key_exprs(cfg, offset))).alias("bkey")
-    )
-
-
-def _pairs_from_bands(
-    bands: DataFrame,
-    payload: str | None,
-    cfg: DedupeConfig,
-    caches: list | None = None,
+def bucket_pairs(
+    bands: DataFrame, cfg: DedupeConfig, caches: list | None = None
 ) -> DataFrame:
-    """Self-join band-key rows (doc_id, bkey[, payload]) into candidate
-    pairs (src < dst), salting hot buckets. ``payload`` is an optional
-    fingerprint column carried inline for verification — only worth it for
-    small fixed-width payloads (the 8-byte simhash); wide payloads (minhash
-    arrays) are re-joined after pair dedup.
+    """Self-join (doc_id, bkey) rows into candidate pairs (src < dst),
+    salting hot buckets. Not deduplicated: a pair sharing several buckets
+    appears once per shared bucket.
 
-    ``bkey`` is ONE hashed 8-byte join key (producers pre-hash their
-    (band_id, band_key) pairs — see simhash_band_keys): a hash collision can
-    only merge two buckets (extra candidates, filtered at verify) — it can
-    never lose a pair — and the narrow 16-byte rows keep the dominant
-    shuffle small.
+    ``bkey`` is ONE 8-byte join key (see band_keys): the narrow 16-byte rows
+    keep the dominant shuffle small.
 
     Cold buckets (the overwhelming majority) take a plain equi-join; buckets
     above cfg.max_bucket_size are pair-generated via (g1 <= g2) salt-pair
@@ -207,13 +181,11 @@ def _pairs_from_bands(
     # scan measured 2x faster than caching + eagerly counting 44M band rows.
     # (rep_sig MUST be eagerly cached by the caller — a lazy cache lets
     # concurrently-scheduled stages recompute the fingerprint UDF itself.)
-    bands = bands.select("doc_id", "bkey", *([payload] if payload else []))
+    bands = bands.select("doc_id", "bkey")
     # bucket size via a window count: ONE shuffle of the band table (the
     # groupBy-sizes + join-back formulation shuffles it three times), and the
     # self-join below reuses the window's hash(bkey) partitioning — Catalyst
     # inserts no further exchange for the equi-join.
-    from pyspark.sql import Window
-
     b = bands.withColumn(
         "bucket_n", F.count("*").over(Window.partitionBy("bkey"))
     ).filter(F.col("bucket_n") > 1)
@@ -233,18 +205,7 @@ def _pairs_from_bands(
         r,
         (F.col("l.bkey") == F.col("r.bkey"))
         & (F.col("l.doc_id") < F.col("r.doc_id")),
-    ).select(
-        F.col("l.doc_id").alias("src"),
-        F.col("r.doc_id").alias("dst"),
-        *(
-            [
-                F.col(f"l.{payload}").alias(f"src_{payload}"),
-                F.col(f"r.{payload}").alias(f"dst_{payload}"),
-            ]
-            if payload
-            else []
-        ),
-    )
+    ).select(F.col("l.doc_id").alias("src"), F.col("r.doc_id").alias("dst"))
 
     # Degenerate-bucket guard (cfg.bucket_cap, default off): buckets above
     # the cap generate no pairs — salting spreads an m^2 bucket across s^2
@@ -280,7 +241,6 @@ def _pairs_from_bands(
     hr = salted.withColumn(
         "g1", F.explode(F.sequence(F.lit(0), F.col("g")))
     ).withColumnRenamed("g", "g2")
-    l_first = F.col("l.doc_id") < F.col("r.doc_id")
     hot_pairs = (
         hl.alias("l")
         .join(
@@ -293,18 +253,6 @@ def _pairs_from_bands(
         .select(
             F.least("l.doc_id", "r.doc_id").alias("src"),
             F.greatest("l.doc_id", "r.doc_id").alias("dst"),
-            *(
-                [
-                    F.when(l_first, F.col(f"l.{payload}"))
-                    .otherwise(F.col(f"r.{payload}"))
-                    .alias(f"src_{payload}"),
-                    F.when(l_first, F.col(f"r.{payload}"))
-                    .otherwise(F.col(f"l.{payload}"))
-                    .alias(f"dst_{payload}"),
-                ]
-                if payload
-                else []
-            ),
         )
         .dropDuplicates(["src", "dst"])
     )
@@ -320,67 +268,53 @@ def _pairs_from_bands(
     return pairs
 
 
-def simhash_candidate_edges(
-    rep_sig: DataFrame, cfg: DedupeConfig, caches: list | None = None
+def lsh_candidate_edges(
+    rep_sig: DataFrame, cfg: DedupeConfig, caches: list | None, families: tuple
 ) -> DataFrame:
-    """Verified simhash edges: (src, dst, hamming, origin='simhash').
+    """Verified LSH edges over (doc_id, simhash[, minhash]) rows: ONE
+    self-join over the band keys of every family in ``families``, one pair
+    dedup, one verify join — instead of one full pipeline per family. A pair
+    surfaced by either family is verified against every banded family's
+    threshold; ``origin`` records the strongest evidence (simhash if within
+    Hamming d — this also upgrades minhash-found pairs that happen to be
+    Hamming-close, making the Hamming semantics *more* complete than running
+    the passes separately).
 
-    The verify filter is pure JVM whole-stage codegen — 64-bit XOR +
-    bit_count, the Spark analogue of the reference's byte-packed vectors
-    (common/imagededuper.py:186; SURVEY.md §4 X4). Inclusive threshold per
-    common/imagededuper.py:207.
+    Returns (src, dst, hamming, jaccard_est, origin in {simhash, minhash});
+    jaccard_est is NULL unless the minhash family is banded.
     """
-    assert cfg.hamming_d < cfg.simhash_bands, (
-        "pigeonhole guarantee requires d < number of bands"
-    )
-    bands = simhash_bands(rep_sig, cfg).select(
-        "doc_id", F.xxhash64("band_id", "band_key").alias("bkey"), "simhash"
-    )
-    pairs = _pairs_from_bands(bands, "simhash", cfg, caches)
-    return (
-        pairs.dropDuplicates(["src", "dst"])
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("src_simhash").bitwiseXOR(F.col("dst_simhash"))),
+    sim, mh = "simhash" in families, "minhash" in families
+    pairs = bucket_pairs(band_keys(rep_sig, cfg, families), cfg, caches)
+    # hamming is reported for every edge; the wide minhash array is
+    # re-joined only when its family is verified
+    fps = ["simhash"] + (["minhash"] if mh else [])
+    joined = pairs.dropDuplicates(["src", "dst"])
+    for side in ("src", "dst"):
+        joined = joined.join(
+            rep_sig.select(
+                F.col("doc_id").alias(side),
+                *[F.col(c).alias(f"{side}_{c}") for c in fps],
+            ),
+            [side],
         )
-        .filter(F.col("hamming") <= cfg.hamming_d)
-        .select("src", "dst", "hamming", F.lit("simhash").alias("origin"))
+    scored = joined.select(
+        "src",
+        "dst",
+        hamming(F.col("src_simhash"), F.col("dst_simhash")).alias("hamming"),
+        (
+            jaccard_est(F.col("src_minhash"), F.col("dst_minhash"), cfg)
+            if mh
+            else F.lit(None).cast("double")
+        ).alias("jaccard_est"),
     )
-
-
-def minhash_candidate_edges(
-    rep_sig: DataFrame, cfg: DedupeConfig, caches: list | None = None
-) -> DataFrame:
-    """Verified minhash edges: (src, dst, jaccard_est, origin='minhash').
-
-    jaccard_est = fraction of agreeing signature positions (the standard
-    MinHash estimator); threshold tau is inclusive, mirroring the reference's
-    inclusive Hamming threshold.
-    """
-    pairs = _pairs_from_bands(
-        minhash_band_keys(rep_sig, cfg), None, cfg, caches
-    ).dropDuplicates(["src", "dst"])
-    sigs = rep_sig.select("doc_id", "minhash")
-    pairs = (
-        pairs.join(sigs.withColumnRenamed("doc_id", "src"), ["src"])
-        .withColumnRenamed("minhash", "src_minhash")
-        .join(sigs.withColumnRenamed("doc_id", "dst"), ["dst"])
-        .withColumnRenamed("minhash", "dst_minhash")
-    )
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("src_minhash"),
-            F.col("dst_minhash"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        pairs.withColumn("jaccard_est", agree / F.lit(cfg.minhash_perms))
-        .filter(F.col("jaccard_est") >= cfg.jaccard_tau)
-        .select("src", "dst", "jaccard_est", F.lit("minhash").alias("origin"))
-    )
+    near = F.col("hamming") <= cfg.hamming_d
+    keep = F.lit(False)
+    if sim:
+        keep = keep | near
+    if mh:
+        keep = keep | (F.col("jaccard_est") >= cfg.jaccard_tau)
+    origin = F.when(near, "simhash").otherwise("minhash") if sim else F.lit("minhash")
+    return scored.filter(keep).withColumn("origin", origin)
 
 
 def doc_rep_map(sig: DataFrame, reps: DataFrame | None = None) -> DataFrame:
@@ -395,86 +329,6 @@ def doc_rep_map(sig: DataFrame, reps: DataFrame | None = None) -> DataFrame:
         reps = sha_representatives(sig)
     return sig.select("doc_id", "sha256").join(reps, ["sha256"]).select(
         "doc_id", "rep_id"
-    )
-
-
-def lsh_candidate_edges(
-    rep_sig: DataFrame, cfg: DedupeConfig, caches: list | None = None
-) -> DataFrame:
-    """Combined simhash + minhash LSH pass: ONE self-join over the union of
-    both key tables (band_id offset keeps keyspaces disjoint), one pair
-    dedup, one verify join — instead of two full pipelines over the band
-    tables. A pair surfaced by either family is verified against BOTH
-    thresholds; ``origin`` records the strongest evidence (simhash if within
-    Hamming d — this also upgrades minhash-found pairs that happen to be
-    Hamming-close, making the Hamming semantics *more* complete than running
-    the passes separately).
-
-    Returns (src, dst, hamming, jaccard_est, origin in {simhash, minhash}).
-    """
-    assert cfg.hamming_d < cfg.simhash_bands, (
-        "pigeonhole guarantee requires d < number of bands"
-    )
-    from math import comb
-
-    n_sim_combos = comb(cfg.simhash_bands, cfg.simhash_bands - cfg.hamming_d)
-    # ONE projection + ONE explode over the concatenated key families (r7):
-    # the r6 union of per-family band tables scanned the rep_sig cache once
-    # per family; identical (doc_id, bkey) rows, one cache scan.
-    key_exprs = []
-    if "simhash" in cfg.passes:
-        key_exprs += _simhash_key_exprs(cfg, offset=0)
-    if "minhash" in cfg.passes:
-        key_exprs += _minhash_key_exprs(cfg, offset=n_sim_combos)
-    bands = rep_sig.select(
-        "doc_id", F.explode(F.array(*key_exprs)).alias("bkey")
-    )
-
-    pairs = _pairs_from_bands(bands, None, cfg, caches).dropDuplicates(["src", "dst"])
-    sigs = rep_sig.select("doc_id", "simhash", "minhash")
-    joined = (
-        pairs.join(
-            sigs.select(
-                F.col("doc_id").alias("src"),
-                F.col("simhash").alias("src_simhash"),
-                F.col("minhash").alias("src_minhash"),
-            ),
-            ["src"],
-        )
-        .join(
-            sigs.select(
-                F.col("doc_id").alias("dst"),
-                F.col("simhash").alias("dst_simhash"),
-                F.col("minhash").alias("dst_minhash"),
-            ),
-            ["dst"],
-        )
-    )
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("src_minhash"),
-            F.col("dst_minhash"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    scored = joined.withColumn(
-        "hamming",
-        F.bit_count(F.col("src_simhash").bitwiseXOR(F.col("dst_simhash"))),
-    ).withColumn("jaccard_est", agree / F.lit(cfg.minhash_perms))
-    keep = F.lit(False)
-    if "simhash" in cfg.passes:
-        keep = keep | (F.col("hamming") <= cfg.hamming_d)
-    if "minhash" in cfg.passes:
-        keep = keep | (F.col("jaccard_est") >= cfg.jaccard_tau)
-    origin = (
-        F.when(F.col("hamming") <= cfg.hamming_d, F.lit("simhash"))
-        if "simhash" in cfg.passes
-        else F.when(F.lit(False), F.lit("simhash"))
-    ).otherwise(F.lit("minhash"))
-    return scored.filter(keep).select(
-        "src", "dst", "hamming", "jaccard_est", origin.alias("origin")
     )
 
 
@@ -543,32 +397,33 @@ def all_candidate_edges(
 
         pool = ThreadPoolExecutor(max_workers=1)
         contain_future = pool.submit(containment_edges, corpus, cfg, caches)
-    rep_sig = rep_signatures(sig, reps).persist()
-    rep_sig.count()
-    if caches is not None:
-        caches.append(rep_sig)
-    spark = sig.sparkSession
-    # seed schema follows the configured id width (long or struct<hi,lo>)
-    id_type = dict(sig.dtypes)["doc_id"]
-    parts = [
-        spark.createDataFrame(
+    try:
+        rep_sig = rep_signatures(sig, reps).persist()
+        rep_sig.count()
+        if caches is not None:
+            caches.append(rep_sig)
+        # seed schema follows the configured id width (long or struct<hi,lo>)
+        id_type = dict(sig.dtypes)["doc_id"]
+        unioned = sig.sparkSession.createDataFrame(
             [], f"src {id_type}, dst {id_type}, hamming int, origin string"
         )
-    ]
-    if "exact" in cfg.passes:
-        parts.append(exact_edges(doc_rep))
-    if "simhash" in cfg.passes or "minhash" in cfg.passes:
-        parts.append(
-            lsh_candidate_edges(rep_sig, cfg, caches).select(
-                "src", "dst", "hamming", "origin"
+        if "exact" in cfg.passes:
+            unioned = unioned.unionByName(exact_edges(doc_rep))
+        families = tuple(f for f in FAMILIES if f in cfg.passes)
+        if families:
+            unioned = unioned.unionByName(
+                lsh_candidate_edges(rep_sig, cfg, caches, families).select(
+                    "src", "dst", "hamming", "origin"
+                )
             )
-        )
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionByName(p)
-    if contain_future is not None:
-        unioned = unioned.unionByName(contain_future.result())
-        pool.shutdown()
+        if contain_future is not None:
+            unioned = unioned.unionByName(contain_future.result())
+    finally:
+        if pool is not None:
+            # on an LSH error the containment thread may still be running
+            # Spark jobs and appending to ``caches``: let it finish before the
+            # caller drains them; the LSH error propagates, not the thread's
+            pool.shutdown(wait=True, cancel_futures=True)
     ranked = (
         unioned
         .withColumn(
@@ -579,8 +434,6 @@ def all_candidate_edges(
             .otherwise(3),
         )
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("src", "dst").orderBy("origin_rank")
     return (
         ranked.withColumn("rn", F.row_number().over(w))

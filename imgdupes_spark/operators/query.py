@@ -8,10 +8,12 @@ enabled in cfg.passes (exact sha256 equality, simhash Hamming bands, minhash
 Jaccard bands) and unions the verified hits.
 
 Plan shape (round-1 verdict item 4): probe FIRST, metadata LAST. The probe
-side is a (tiny) DataFrame: its band rows are broadcast and hash-joined
-against the bare corpus band projection, the verify filter prunes to the few
-survivors, and only THEN is (repo, path) attached — via a second broadcast
-join against the corpus scan. The corpus is never shuffled for a probe.
+side is a (tiny) DataFrame: its band keys — the same 8-byte ``bkey`` rows the
+dedupe self-join uses (operators/lsh.band_keys) — are broadcast and
+hash-joined against the bare corpus key projection, the verify filter prunes
+to the few survivors, and only THEN is (repo, path) attached — via a second
+broadcast join against the corpus scan. The corpus is never shuffled for a
+probe.
 
 The probe itself is not a member of the result set (reference pad logic,
 common/imagededuper.py:471-472): output rows are corpus docs only, keyed by
@@ -20,12 +22,14 @@ the probe's (repo, path).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from imgdupes_spark.config import DedupeConfig
 from imgdupes_spark.functions.fingerprints import signatures
-from imgdupes_spark.operators.lsh import minhash_bands, simhash_bands
+from imgdupes_spark.operators.lsh import FAMILIES, band_keys, hamming, jaccard_est
 
 
 def _exact_hits(corpus_sig: DataFrame, probe_sig: DataFrame) -> DataFrame:
@@ -54,106 +58,50 @@ def _exact_hits(corpus_sig: DataFrame, probe_sig: DataFrame) -> DataFrame:
     )
 
 
-def _simhash_hits(corpus_sig: DataFrame, probe_sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    probe_bands = (
-        simhash_bands(probe_sig.select("doc_id", "simhash"), cfg)
-        .join(
-            probe_sig.select(
-                "doc_id",
-                F.col("repo").alias("query_repo"),
-                F.col("path").alias("query_path"),
-                F.col("commit").alias("query_commit"),
-            ),
-            ["doc_id"],
-        )
-        .select(
-            F.col("simhash").alias("q_simhash"),
-            "band_id",
-            "band_key",
-            "query_repo",
-            "query_path",
-            "query_commit",
-        )
+def _band_hits(
+    corpus_sig: DataFrame, probe_sig: DataFrame, cfg: DedupeConfig, families: tuple
+) -> DataFrame:
+    """LSH-family probe: the corpus band keys (lsh.band_keys, one explode for
+    every family) hash-join the broadcast probe keys on the 8-byte ``bkey``;
+    each probe key row is tagged with its family, so a hit is verified (and
+    reported) under the family whose band collided — a minhash hit still
+    needs a minhash-band collision. The corpus fingerprints needed for the
+    verify are re-joined for the (small) deduplicated survivor set only,
+    still broadcast."""
+    query = probe_sig.select(
+        "doc_id",
+        F.col("simhash").alias("q_simhash"),
+        F.col("minhash").alias("q_minhash"),
+        F.col("repo").alias("query_repo"),
+        F.col("path").alias("query_path"),
+        F.col("commit").alias("query_commit"),
     )
-    corpus_bands = simhash_bands(corpus_sig.filter(F.col("simhash").isNotNull()), cfg)
-    return (
-        corpus_bands.join(F.broadcast(probe_bands), ["band_id", "band_key"])
-        .withColumn(
-            "hamming", F.bit_count(F.col("simhash").bitwiseXOR(F.col("q_simhash")))
-        )
-        .filter(F.col("hamming") <= cfg.hamming_d)
-        .select(
-            "doc_id",
-            "query_repo",
-            "query_path",
-            "query_commit",
-            "hamming",
-            F.lit(None).cast("double").alias("jaccard_est"),
-            F.lit("simhash").alias("origin"),
-        )
-    )
-
-
-def _minhash_hits(corpus_sig: DataFrame, probe_sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    """Minhash-family probe: band-key collision, then the Jaccard estimator
-    over the full signatures. The probe signatures ride along broadcast; the
-    corpus signature needed for the verify is already on the band row's doc —
-    re-joined from the (small) survivor set, still broadcast."""
-    probe_bands = (
-        minhash_bands(probe_sig.select("doc_id", "minhash"), cfg)
-        .join(
-            probe_sig.select(
-                "doc_id",
-                F.col("minhash").alias("q_minhash"),
-                F.col("repo").alias("query_repo"),
-                F.col("path").alias("query_path"),
-                F.col("commit").alias("query_commit"),
-            ),
-            ["doc_id"],
-        )
-        .select(
-            "band_id", "band_key", "q_minhash",
-            "query_repo", "query_path", "query_commit",
-        )
-    )
-    corpus_bands = minhash_bands(
-        corpus_sig.filter(F.col("minhash").isNotNull()), cfg
-    )
+    probe_keys = reduce(
+        DataFrame.unionByName,
+        [band_keys(probe_sig, cfg, (f,)).withColumn("family", F.lit(f)) for f in families],
+    ).join(query, ["doc_id"]).drop("doc_id")
+    probe_cols = ["query_repo", "query_path", "query_commit", "family"]
     cand = (
-        corpus_bands.join(F.broadcast(probe_bands), ["band_id", "band_key"])
-        .dropDuplicates(["doc_id", "query_repo", "query_path", "query_commit"])
+        band_keys(corpus_sig.filter(F.col("simhash").isNotNull()), cfg, families)
+        .join(F.broadcast(probe_keys), ["bkey"])
+        .dropDuplicates(["doc_id", *probe_cols])
+        .drop("bkey")
     )
-    # attach the corpus signature for the survivors only (broadcast the tiny
-    # survivor set against the corpus signature projection)
-    sigs = corpus_sig.select("doc_id", "minhash")
-    cand = sigs.join(
-        F.broadcast(
-            cand.select(
-                "doc_id", "q_minhash", "query_repo", "query_path", "query_commit"
-            )
-        ),
-        ["doc_id"],
-    )
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("minhash"),
-            F.col("q_minhash"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    ham = hamming(F.col("simhash"), F.col("q_simhash"))
+    jac = jaccard_est(F.col("minhash"), F.col("q_minhash"), cfg)
+    is_sim = F.col("family") == "simhash"
     return (
-        cand.withColumn("jaccard_est", agree / F.lit(cfg.minhash_perms))
-        .filter(F.col("jaccard_est") >= cfg.jaccard_tau)
+        corpus_sig.select("doc_id", "simhash", "minhash")
+        .join(F.broadcast(cand), ["doc_id"])
+        .filter(F.when(is_sim, ham <= cfg.hamming_d).otherwise(jac >= cfg.jaccard_tau))
         .select(
             "doc_id",
             "query_repo",
             "query_path",
             "query_commit",
-            F.lit(None).cast("int").alias("hamming"),
-            "jaccard_est",
-            F.lit("minhash").alias("origin"),
+            F.when(is_sim, ham).alias("hamming"),
+            F.when(~is_sim, jac).alias("jaccard_est"),
+            F.col("family").alias("origin"),
         )
     )
 
@@ -178,10 +126,9 @@ def query_probe(
     hits = []
     if "exact" in cfg.passes:
         hits.append(_exact_hits(corpus_sig, probe_all))
-    if "simhash" in cfg.passes:
-        hits.append(_simhash_hits(corpus_sig, probe_sig, cfg))
-    if "minhash" in cfg.passes:
-        hits.append(_minhash_hits(corpus_sig, probe_sig, cfg))
+    families = tuple(f for f in FAMILIES if f in cfg.passes)
+    if families:
+        hits.append(_band_hits(corpus_sig, probe_sig, cfg, families))
     assert hits, "query_probe: no probe-capable pass enabled in cfg.passes"
     unioned = hits[0]
     for h in hits[1:]:

@@ -105,7 +105,7 @@ def cross_modal_matches(
     Returns (image_asset_id, video_asset_id, frame_idx, hamming), one row
     per matched (image, frame) pair within cfg.hamming_d.
     """
-    from imgdupes_spark.operators.lsh import simhash_candidate_edges
+    from imgdupes_spark.operators.lsh import lsh_candidate_edges
     from imgdupes_spark.sources.multimodal import (
         extract_image_features,
         extract_video_features,
@@ -163,7 +163,7 @@ def cross_modal_matches(
         ).persist()
         pins.append(sig)
         sig.count()  # eager: scanned by band generation
-        edges = simhash_candidate_edges(sig, cfg, caches)
+        edges = lsh_candidate_edges(sig, cfg, caches, ("simhash",))
         # survivors-only re-join to recover identities; orientation of the
         # canonical (src < dst) hash pair carries no modality information, so
         # normalize with the kind column
@@ -279,7 +279,7 @@ def partwise_dedup(
     """
     from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
     from imgdupes_spark.operators.components import connected_components
-    from imgdupes_spark.operators.lsh import simhash_candidate_edges
+    from imgdupes_spark.operators.lsh import lsh_candidate_edges
 
     spark = feats.sparkSession
     # NULL-hash rows are quarantine sentinels (decode failures under
@@ -293,7 +293,7 @@ def partwise_dedup(
     sig = feats.select(
         node_id.alias("doc_id"), F.col(hash_col).alias("simhash")
     )
-    part_edges = simhash_candidate_edges(sig, cfg, caches)
+    part_edges = lsh_candidate_edges(sig, cfg, caches, ("simhash",))
     # part pair -> asset pair: recover (asset, part) per endpoint via the
     # survivors-only node-map join, then canonicalize the asset pair with
     # least/greatest (hash node ids carry no asset ordering). The threshold

@@ -4,7 +4,7 @@ Every operator that persists an intermediate must drain it before returning:
 the only persistent RDDs left behind are the operator's OWN materialized
 result (ops that return a localCheckpoint(eager=True) pin exactly that — an
 intentional, bounded artifact the caller owns, released when the result is
-GC'd). A leaked intermediate (e.g. the band table inside _pairs_from_bands)
+GC'd). A leaked intermediate (e.g. the band table inside bucket_pairs)
 shows up as an EXTRA persistent RDD that nobody can release — at 100 TB
 that's billions of cached band rows pinned for the session.
 
@@ -22,7 +22,7 @@ from imgdupes_spark.functions.fingerprints import signatures
 from imgdupes_spark.operators.clusters import dedupe_members
 from imgdupes_spark.operators.containment import containment_edges
 from imgdupes_spark.operators.knn import embedding_dedup
-from imgdupes_spark.operators.lsh import _pairs_from_bands
+from imgdupes_spark.operators.lsh import bucket_pairs
 
 
 def _persistent_ids(spark) -> set:
@@ -33,12 +33,12 @@ def _new_after(spark, before: set) -> set:
     return _persistent_ids(spark) - before
 
 
-def test_pairs_from_bands_self_manages_cache(spark, cfg):
+def test_bucket_pairs_self_manages_cache(spark, cfg):
     before = _persistent_ids(spark)
     bands = spark.range(200).select(
         F.col("id").alias("doc_id"), (F.col("id") % 10).alias("bkey")
     )
-    pairs = _pairs_from_bands(bands, None, cfg)
+    pairs = bucket_pairs(bands, cfg)
     assert pairs.count() > 0
     new = _new_after(spark, before)
     # exactly the returned localCheckpoint — the internal band cache is gone
@@ -79,6 +79,34 @@ def test_dedupe_members_pipeline_drains_all(spark, cfg, small_corpus):
     assert members.count() > 0
     new = _new_after(spark, before)
     assert len(new) <= 1, f"leaked persistent RDDs: {new}"
+
+
+def test_dedupe_members_lsh_failure_releases_all(spark, cfg, small_corpus, monkeypatch):
+    """An error in the LSH branch must surface only after the containment
+    overlap thread has finished, and leave nothing pinned: dedupe_members
+    drains every cache (its own, rep_sig and the thread's) on the way out."""
+    import threading
+
+    import pytest
+
+    from imgdupes_spark.operators import lsh
+
+    def boom(*a, **k):
+        raise RuntimeError("injected LSH failure")
+
+    small_corpus.count()  # materialize the session fixture's own cache first
+    monkeypatch.setattr(lsh, "lsh_candidate_edges", boom)
+    before = _persistent_ids(spark)
+    threads_before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected LSH failure"):
+        dedupe_members(signatures(small_corpus, cfg), cfg, corpus=small_corpus)
+    pool_threads = [
+        t for t in set(threading.enumerate()) - threads_before
+        if t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not pool_threads, f"containment thread still alive: {pool_threads}"
+    new = _new_after(spark, before)
+    assert not new, f"leaked persistent RDDs: {new}"
 
 
 def test_mega_rank_releases_range_checkpoint(spark, cfg, small_corpus):

@@ -61,6 +61,12 @@ def test_query_probe_finds_neighbors(spark, cfg, small_corpus, small_corpus_pd):
         for _, r in corpus_pd[corpus_pd.content == content].iterrows()
     }
     assert {(r.repo, r.path) for r in ex_only} == expected
+
+    # the families probe independently: the all-passes result is exactly the
+    # union of the single-family runs (a minhash row needs a minhash-band
+    # collision, a simhash row a simhash one)
+    sh_only = query_probe(sig, probe, DedupeConfig(passes=("simhash",))).collect()
+    assert set(res) == set(ex_only) | set(sh_only) | set(mh_only)
     sig.unpersist()
 
 

@@ -36,7 +36,7 @@ def test_query_probe_is_broadcast_join(spark, cfg, small_corpus):
     assert "ShuffledHashJoin" not in plan
     for chunk in plan.split("Exchange hashpartitioning")[1:]:
         keys = chunk.split(")")[0]
-        assert "band_key" not in keys and "band_id" not in keys, plan
+        assert "bkey" not in keys, plan
 
 
 def test_scan_is_columnar_and_codegen(spark):

@@ -1,6 +1,6 @@
 """Hot-bucket (salted) pair-generation regression tests.
 
-Round-1 verdict: the salted branch of ``_pairs_from_bands`` only activates for
+Round-1 verdict: the salted branch of ``bucket_pairs`` only activates for
 buckets above cfg.max_bucket_size — i.e. only at real scale — and the round-1
 implementation dropped every pair whose doc_id order opposed its salt-group
 order (~half of all cross-salt pairs). These tests force the branch at test
@@ -13,13 +13,11 @@ from __future__ import annotations
 
 from math import comb
 
-from pyspark.sql import functions as F
-
 from imgdupes_spark import oracle
 from imgdupes_spark.config import DedupeConfig
 from imgdupes_spark.functions.fingerprints import signatures
 from imgdupes_spark.operators.clusters import dedupe_members
-from imgdupes_spark.operators.lsh import _pairs_from_bands
+from imgdupes_spark.operators.lsh import bucket_pairs
 
 
 def _all_pairs(df):
@@ -33,27 +31,11 @@ def test_hot_bucket_emits_all_pairs(spark):
     cfg = DedupeConfig(max_bucket_size=2, salt_parts=4)
     docs = [(i * 7919 + 13, 1) for i in range(12)]  # arbitrary ids, one bucket
     bands = spark.createDataFrame(docs, "doc_id long, bkey long")
-    pairs = _all_pairs(_pairs_from_bands(bands, None, cfg))
+    pairs = _all_pairs(bucket_pairs(bands, cfg))
     ids = sorted(d for d, _ in docs)
     expected = {(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]}
     assert len(pairs) == comb(12, 2), f"got {len(pairs)} pairs, want 66"
     assert pairs == expected
-
-
-def test_hot_bucket_payload_orientation(spark):
-    """With a payload column the canonicalized pair must carry src's payload
-    under src_* and dst's under dst_* regardless of which join side each doc
-    landed on."""
-    cfg = DedupeConfig(max_bucket_size=2, salt_parts=4)
-    docs = [(i, 1, i * 100) for i in range(8)]
-    bands = spark.createDataFrame(docs, "doc_id long, bkey long, simhash long")
-    out = _pairs_from_bands(bands, "simhash", cfg)
-    bad = out.filter(
-        (F.col("src_simhash") != F.col("src") * 100)
-        | (F.col("dst_simhash") != F.col("dst") * 100)
-    )
-    assert bad.isEmpty()
-    assert out.count() == comb(8, 2)
 
 
 def test_mixed_hot_and_cold_buckets(spark):
@@ -67,7 +49,7 @@ def test_mixed_hot_and_cold_buckets(spark):
     for i in range(3):
         rows.append((i, 2))
     bands = spark.createDataFrame(rows, "doc_id long, bkey long")
-    pairs = _all_pairs(_pairs_from_bands(bands, None, cfg))
+    pairs = _all_pairs(bucket_pairs(bands, cfg))
     expected = {(a, b) for a in range(10) for b in range(a + 1, 10)}
     assert pairs == expected
 
