@@ -12,18 +12,16 @@ Scale shape (the part that matters at 100 TB):
           map-side partial-agg countDistinct(doc) per hash, keep hashes
           present in >= min_docs distinct docs. Line TEXT never shuffles;
           the explode rows are 16 bytes.
-  strip — the hot-hash set is tiny by construction (a line shared by >=
-          min_docs docs is boilerplate; corpora have few of those). It is
-          driver-collected ONCE — the same materialization any broadcast
-          join performs — and the strategy auto-switches on its size:
-          up to ``max_literal_lines`` hashes fold into a whole-stage-
-          codegen ``isin`` filter over the per-row split (NO second
-          shuffle, each doc rewritten map-side); a denser set would
-          serialize a multi-MB plan and knock the filter out of codegen,
-          so it becomes a broadcast LEFT ANTI join + positional
-          reassembly instead. Either way the hot-line aggregation runs
-          exactly once (the dense plan re-reads the collected set as a
-          LocalTableScan, never re-aggregates — plan-pinned in tests).
+  strip — the hot-hash set is usually tiny (a line shared by >= min_docs
+          docs is boilerplate; corpora have few of those), but nothing
+          bounds it, so the driver collects at most ``max_literal_lines``
+          + 1 hashes: a probe that picks the strategy. Up to
+          ``max_literal_lines`` hashes fold into a whole-stage-codegen
+          ``isin`` filter over the per-row split (NO second shuffle, each
+          doc rewritten map-side); a denser set would serialize a multi-MB
+          plan and knock the filter out of codegen, so the strip becomes a
+          broadcast LEFT ANTI join against the DISTRIBUTED hot-line set
+          (never a driver-side list) + positional reassembly instead.
 
 Line identity is the raw ``\\n`` split, whitespace-trimmed, hashed with
 xxhash64 — trim parity with the DuckDB oracle is pinned by the driver

@@ -65,7 +65,7 @@ FAMILIES = ("simhash", "minhash")
 
 
 def _family_key_exprs(cfg: DedupeConfig, family: str) -> list:
-    """Pre-hashed 8-byte band-key expressions of one family.
+    """Pre-hashed 8-byte band-key expressions of one family, as SQL text.
 
     simhash: NOT single-block keys. A naive b-band scheme (b*r = 64, key =
     one r-bit block) has only 2^r distinct keys per band, so uniformly-random
@@ -95,30 +95,32 @@ def _family_key_exprs(cfg: DedupeConfig, family: str) -> list:
     if family == "simhash":
         mask = (1 << r) - 1
         blocks = [
-            F.shiftrightunsigned(F.col("simhash"), r * i).bitwiseAND(F.lit(mask))
+            f"(shiftrightunsigned(simhash, {r * i}) & {mask})"
             for i in range(cfg.simhash_bands)
         ]
         keys = []
         for ci, combo in enumerate(combinations(range(cfg.simhash_bands), m)):
-            key = F.lit(0).cast("long")
+            key = "CAST(0 AS BIGINT)"
             for i in combo:
-                key = key * F.lit(mask + 1) + blocks[i]
-            keys.append(F.xxhash64(F.lit(ci), key))
+                key = f"(({key} * {mask + 1}) + {blocks[i]})"
+            keys.append(f"xxhash64({ci}, {key})")
         return keys
     assert family == "minhash", f"unknown LSH family {family!r}"
     offset = comb(cfg.simhash_bands, m)
     rpb = cfg.minhash_rows_per_band
     return [
-        F.xxhash64(
-            F.lit(offset + i),
-            *[F.element_at(F.col("minhash"), i * rpb + j + 1) for j in range(rpb)],
+        "xxhash64({}, {})".format(
+            offset + i,
+            ", ".join(f"element_at(minhash, {i * rpb + j + 1})" for j in range(rpb)),
         )
         for i in range(cfg.minhash_bands)
     ]
 
 
-def band_keys(df: DataFrame, cfg: DedupeConfig, families: tuple) -> DataFrame:
-    """(doc_id, bkey) LSH rows: every band key of every family in
+def band_keys(
+    df: DataFrame, cfg: DedupeConfig, families: tuple, *keep: str | Column
+) -> DataFrame:
+    """(doc_id, *keep, bkey) LSH rows: every band key of every family in
     ``families``, from ONE projection and ONE explode over the concatenated
     key array (r7: the r6 union of per-family band tables scanned the rep_sig
     cache once per family).
@@ -131,13 +133,23 @@ def band_keys(df: DataFrame, cfg: DedupeConfig, families: tuple) -> DataFrame:
     bkey hash collision can only merge two buckets (extra candidates, removed
     at verify) — never lose a pair.
 
-    Deliberately carries NO fingerprint: a band table of n_docs x n_bands
-    rows each lugging the ~550-byte minhash array turns the self-join into a
-    multi-GB shuffle (measured 3x the cost of the whole simhash pass at 400k
-    docs). Verify re-joins the fingerprints for the surviving pairs only.
+    The key array is parsed from ONE SQL string (``F.expr``, one py4j
+    call): building the same 102 default keys as Column objects took ~1,000
+    py4j calls, 1.5 s of driver time for simhash and 0.45 s for minhash
+    (median of 5 on a 4-core VM; the SQL string: 0.18 s and 0.04 s), paid on
+    every call, three times per query_probe. The parsed expression tree,
+    the physical plan and every ``bkey`` are identical.
+
+    The dedupe path keeps NO fingerprint (``keep`` empty): a band table of
+    n_docs x n_bands rows each lugging the ~550-byte minhash array turns the
+    self-join into a multi-GB shuffle (measured 3x the cost of the whole
+    simhash pass at 400k docs); verify re-joins the fingerprints for the
+    surviving pairs only. ``keep`` passes columns through for the tiny probe
+    side (query.py), which would otherwise re-join its own fingerprints.
     """
     keys = [k for f in families for k in _family_key_exprs(cfg, f)]
-    return df.select("doc_id", F.explode(F.array(*keys)).alias("bkey"))
+    bkey = F.explode(F.expr(f"array({', '.join(keys)})")).alias("bkey")
+    return df.select("doc_id", *keep, bkey)
 
 
 def hamming(a: Column, b: Column) -> Column:

@@ -292,9 +292,12 @@ def mixture_sample(
     # stratum ("web" = 90% of a crawl) sorts in 256 bounded tasks instead of
     # one. Ranks are identical to the old per-stratum global row_number
     # (total order (__key, id) with the bucket as its own prefix).
-    keyed = docs.select(
-        "*", key.alias("__key"), F.substring(key, 1, 2).alias("__bkt")
-    )
+    # A NULL id has a NULL key but counts toward its stratum's quota, so it
+    # must not fall out of the (stratum, __bkt) join: its bucket is "~",
+    # which sorts after every hex bucket, so it ranks after all keyed rows
+    # of its stratum (NULLs last, like the DuckDB oracle's ORDER BY key).
+    bkt = F.coalesce(F.substring(key, 1, 2), F.lit("~"))
+    keyed = docs.select("*", key.alias("__key"), bkt.alias("__bkt"))
     counts = keyed.groupBy(stratum_col, "__bkt").agg(F.count("*").alias("__bn"))
     w_off = (
         Window.partitionBy(stratum_col)

@@ -67,6 +67,20 @@ def test_query_probe_finds_neighbors(spark, cfg, small_corpus, small_corpus_pd):
     # collision, a simhash row a simhash one)
     sh_only = query_probe(sig, probe, DedupeConfig(passes=("simhash",))).collect()
     assert set(res) == set(ex_only) | set(sh_only) | set(mh_only)
+
+    # edge probes through the driver-side Arrow round trip: an empty probe,
+    # and an all-blank one (quarantined: NULL fingerprint, and a sha256 no
+    # corpus doc shares) both return no rows, under every config
+    cols = "repo string, path string, commit string, lang string, content string"
+    empty = spark.createDataFrame([], cols)
+    blank = spark.createDataFrame(
+        [("probe/blank", "b0.py", "e" * 40, "py", "\n\n"),
+         ("probe/blank", "b1.py", "e" * 40, "py", " \t \n ")],
+        cols,
+    )
+    for edge in (empty, blank):
+        for c in (cfg, DedupeConfig(passes=("minhash",)), DedupeConfig(passes=("exact",))):
+            assert query_probe(sig, edge, c).collect() == []
     sig.unpersist()
 
 

@@ -39,6 +39,28 @@ def test_query_probe_is_broadcast_join(spark, cfg, small_corpus):
         assert "bkey" not in keys, plan
 
 
+def test_query_probe_runs_fingerprint_udf_once(spark, cfg, small_corpus, tmp_path):
+    """The benchmark's probe shape: 16 driver-side rows against a corpus
+    signatures table on disk (every join of the limit(1) probe above is
+    broadcast, so it cannot show a probe-side shuffle). The probe's
+    fingerprint UDF runs once, at call time: the executed plan holds no
+    ArrowEvalPython (the probe side is a LocalTableScan of the
+    fingerprinted rows) and no SortMergeJoin (the probe keys carry their
+    fingerprints; no self-join on doc_id)."""
+    signatures(small_corpus, cfg).write.parquet(str(tmp_path / "sig"))
+    sig = spark.read.parquet(str(tmp_path / "sig"))
+    rows = [
+        (f"probe/{i}", r.path, r.commit, r.lang, r.content)
+        for i, r in enumerate(small_corpus.orderBy("repo", "path").limit(16).collect())
+    ]
+    probe = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    plan = _plan(query_probe(sig, probe, cfg))
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
+
+
 def test_scan_is_columnar_and_codegen(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     q = docs.groupBy("lang").count()

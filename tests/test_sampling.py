@@ -239,6 +239,25 @@ def test_assign_split_plan_no_exchange_no_udf(spark):
     assert "Python" not in plan
 
 
+def test_mixture_sample_keeps_null_id_rows(spark):
+    """A NULL id counts toward its stratum's quota, so it must be sampled
+    too: it ranks after every keyed row of its stratum (NULLs last, as the
+    DuckDB oracle orders them) and never drops out of the rank joins."""
+    from imgdupes_spark.operators.sampling import mixture_sample
+
+    d = spark.createDataFrame(
+        [(i, "a") for i in range(10)] + [(None, "a"), (None, "a"), (None, "b")],
+        "doc_id long, lang string",
+    )
+    full = mixture_sample(d, "lang", {}, default_fraction=1.0).collect()
+    assert len(full) == 13
+    half = mixture_sample(d, "lang", {}, default_fraction=0.5).collect()
+    # quotas: a = ceil(12 / 2) = 6 keyed rows, b = 1 (its only row, NULL id)
+    assert sorted((r.lang, r.doc_id is None) for r in half) == (
+        [("a", False)] * 6 + [("b", True)]
+    )
+
+
 def test_mixture_sample_dominant_stratum_bucketed_rank(spark):
     """r7 skew fence: a dominant stratum must NOT serialize onto one
     row_number task — ranks come from 256 key-range buckets + a prefix-sum
