@@ -24,6 +24,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from imgdupes_spark import caching
 from imgdupes_spark.config import DedupeConfig
 from imgdupes_spark.corpus import boilerplate_corpus_spark, synthetic_corpus_spark
 from imgdupes_spark.functions.fingerprints import signatures
@@ -71,41 +72,42 @@ def main() -> None:
         out_dir = sys.argv[2] if len(sys.argv) > 2 else "plans/r07"
         os.makedirs(out_dir, exist_ok=True)
         suffix = sys.argv[3] if len(sys.argv) > 3 else "before"
-        corpus = corpus_df().persist()
-        corpus.count()
-        sig = signatures(corpus, cfg)
-        bcorpus, _ = boilerplate_corpus_spark(spark, boiler_n)
-        # caches list => containment returns its LAZY plan (no localCheckpoint
-        # truncation), so the file shows the real operator shape
-        caches: list = []
-        contain = containment_edges(bcorpus, cfg, caches)
-        # near_dup_members checkpoints inside dedupe_members; the informative
-        # plan for it is the full candidate-edge pipeline, captured here on
-        # the same corpus shape the query uses
-        from imgdupes_spark.operators.lsh import all_candidate_edges
+        # inside a caching scope the operators return their LAZY plans (no
+        # localCheckpoint truncation), so the files show the real operator
+        # shape; the scope releases their pins once the plans are written
+        with caching.scope():
+            corpus = corpus_df().persist()
+            corpus.count()
+            sig = signatures(corpus, cfg)
+            bcorpus, _ = boilerplate_corpus_spark(spark, boiler_n)
+            contain = containment_edges(bcorpus, cfg)
+            # near_dup_members checkpoints inside dedupe_members; the
+            # informative plan for it is the full candidate-edge pipeline,
+            # captured here on the same corpus shape the query uses
+            from imgdupes_spark.operators.lsh import all_candidate_edges
 
-        nd_corpus = entry_mod._corpus_shape(
-            entry_mod._dup_docs(entry_mod._prep(spark), sf_dir)
-        )
-        nd_sig = signatures(nd_corpus, cfg).persist()
-        nd_sig.count()
-        nd_edges = all_candidate_edges(nd_sig, cfg, corpus=nd_corpus, caches=caches)
-        plans = {
-            "signatures": sig,
-            "containment_boiler": contain,
-            "duplicate_spans_corpus": duplicate_spans(span_input(corpus), k=8),
-            "near_dup_members": nd_edges,
-            "token_shards_corpus": __import__(
-                "imgdupes_spark.operators.sampling", fromlist=["shard_by_tokens"]
-            ).shard_by_tokens(shard_input(corpus), 100_000),
-        }
-        jvm = spark.sparkContext._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        for name, df in plans.items():
-            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-            with open(path, "w") as f:
-                f.write(df._jdf.queryExecution().explainString(mode))
-            print("wrote", path)
+            nd_corpus = entry_mod._corpus_shape(
+                entry_mod._dup_docs(entry_mod._prep(spark), sf_dir)
+            )
+            nd_sig = signatures(nd_corpus, cfg).persist()
+            nd_sig.count()
+            nd_edges = all_candidate_edges(nd_sig, cfg, corpus=nd_corpus)
+            plans = {
+                "signatures": sig,
+                "containment_boiler": contain,
+                "duplicate_spans_corpus": duplicate_spans(span_input(corpus), k=8),
+                "near_dup_members": nd_edges,
+                "token_shards_corpus": __import__(
+                    "imgdupes_spark.operators.sampling", fromlist=["shard_by_tokens"]
+                ).shard_by_tokens(shard_input(corpus), 100_000),
+            }
+            jvm = spark.sparkContext._jvm
+            mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            for name, df in plans.items():
+                path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+                with open(path, "w") as f:
+                    f.write(df._jdf.queryExecution().explainString(mode))
+                print("wrote", path)
         spark.stop()
         return
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from imgdupes_spark.caching import checkpoint, operator, pin
 from imgdupes_spark.config import DedupeConfig
 from imgdupes_spark.operators.lsh import sha_representatives
 
@@ -133,10 +134,9 @@ def _mega_cluster_rank(members: DataFrame, order: list) -> DataFrame:
     must be pinned before two downstream passes read them."""
     spark = members.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parted = (
+    parted = checkpoint(
         members.repartitionByRange(n_parts, F.col("cluster_id"), *order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     counts = parted.groupBy("_pid", "cluster_id").agg(F.count("*").alias("_n"))
     w_off = (
@@ -158,6 +158,7 @@ def _mega_cluster_rank(members: DataFrame, order: list) -> DataFrame:
     )
 
 
+@operator
 def with_set_rank(
     members: DataFrame,
     cfg: DedupeConfig,
@@ -183,20 +184,11 @@ def with_set_rank(
     if big.isEmpty():  # one cheap probe job; skips the 3-shuffle mega path
         return ranked
     # _mega_cluster_rank pins its range-partitioned slice with an eager
-    # localCheckpoint (the partitioner samples, so partition ids must be
-    # stable across its two downstream reads). That pin is the FULL
-    # mega-cluster member table — release it as soon as the ranked result
-    # is materialized, same discipline as every other checkpoint
-    # (caching.py; round-3 advice item 1).
-    from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
-
-    spark = members.sparkSession
-    pre = persistent_rdd_ids(spark)
-    mega = _mega_cluster_rank(big, order)
-    pinned = persistent_rdd_ids(spark) - pre
-    out = ranked.unionByName(mega).localCheckpoint(eager=True)
-    release_rdd_ids(spark, pinned)
-    return out
+    # checkpoint (the partitioner samples, so partition ids must be stable
+    # across its two downstream reads). That pin is the FULL mega-cluster
+    # member table — the scope releases it as soon as the ranked result is
+    # materialized (caching.py; round-3 advice item 1).
+    return ranked.unionByName(_mega_cluster_rank(big, order))
 
 
 def delete_plan(
@@ -310,6 +302,7 @@ def fdupes_text(
     return "\n\n".join(blocks) + ("\n" if blocks else "")
 
 
+@operator
 def star_parity_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """`--grouping star` parity mode (SURVEY.md §2.4 G1): reproduce the
     reference's greedy one-hop star grouping EXACTLY — scan order per
@@ -332,10 +325,8 @@ def star_parity_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
     )
 
     spark = sig.sparkSession
-    caches: list[DataFrame] = []
     reps = sha_representatives(sig)
-    doc_rep = doc_rep_map(sig, reps).persist()
-    caches.append(doc_rep)
+    doc_rep = pin(doc_rep_map(sig, reps))
     keyed = sig.select(
         F.concat_ws("/", "repo", "path").alias("key"), "doc_id"
     )
@@ -350,9 +341,9 @@ def star_parity_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
     # reference parity = Hamming-threshold edges only (the reference has no
     # Jaccard or containment pass): keep exact + simhash origins
     edges_df = rep_edges(
-        all_candidate_edges(
-            sig, cfg, reps=reps, doc_rep=doc_rep, caches=caches
-        ).filter(F.col("origin").isin("exact", "simhash")),
+        all_candidate_edges(sig, cfg, reps=reps, doc_rep=doc_rep).filter(
+            F.col("origin").isin("exact", "simhash")
+        ),
         doc_rep,
     )
     # expand rep-level edges back to doc level via the sha map, then index
@@ -374,8 +365,6 @@ def star_parity_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
         (idx[r.src], idx[r.dst]) for r in expanded.collect()
         if r.src in idx and r.dst in idx
     ]
-    for c in caches:
-        c.unpersist()
     groups = oracle.star_groups(keys, pairs)
     if not groups:
         return spark.createDataFrame([], "key string, star_group long")
@@ -384,6 +373,7 @@ def star_parity_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
     )
 
 
+@operator
 def dedupe_members(
     sig: DataFrame, cfg: DedupeConfig, corpus: DataFrame | None = None
 ) -> DataFrame:
@@ -398,8 +388,9 @@ def dedupe_members(
 
     Containment edges connect *docs*, not sha-representatives; they are
     remapped to representatives before CC so the graph stays over the
-    collapsed node set. The result is eagerly materialized (localCheckpoint)
-    so every intermediate cache can be released before returning."""
+    collapsed node set. A direct call returns the eagerly materialized
+    result and releases every intermediate pin before returning; a ``sig``
+    the caller cached stays cached (caching.pin)."""
     from imgdupes_spark.operators.components import connected_components
     from imgdupes_spark.operators.lsh import (
         all_candidate_edges,
@@ -411,37 +402,21 @@ def dedupe_members(
         return _star_members(sig, cfg)
     assert cfg.grouping == "cc", f"unknown grouping {cfg.grouping!r}"
 
-    from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
-
-    spark = sig.sparkSession
-    caches: list[DataFrame] = [sig.persist()]  # scanned by reps, bands, expansion
-    try:
-        sig.count()  # eager (concurrent-stage cache-race guard, see lsh.py)
-        reps = sha_representatives(sig).persist()
-        doc_rep = doc_rep_map(sig, reps).persist()
-        caches += [reps, doc_rep]
-        edges = rep_edges(
-            all_candidate_edges(
-                sig, cfg, corpus=corpus, reps=reps, doc_rep=doc_rep, caches=caches
-            ),
-            doc_rep,
-        )
-        pre_cc = persistent_rdd_ids(spark)
-        comps = connected_components(edges)
-        cc_ids = persistent_rdd_ids(spark) - pre_cc  # CC's final checkpoint
-        members = assign_clusters(sig, doc_rep, comps).localCheckpoint(eager=True)
-        release_rdd_ids(spark, cc_ids)  # members is materialized; comps is dead
-        return members
-    finally:
-        # also on an error: a failed call must not pin executor storage
-        for c in caches:
-            c.unpersist()
+    sig = pin(sig)  # scanned by reps, bands, expansion
+    sig.count()  # eager (concurrent-stage cache-race guard, see lsh.py)
+    reps = pin(sha_representatives(sig))
+    doc_rep = pin(doc_rep_map(sig, reps))
+    edges = rep_edges(
+        all_candidate_edges(sig, cfg, corpus=corpus, reps=reps, doc_rep=doc_rep),
+        doc_rep,
+    )
+    return assign_clusters(sig, doc_rep, connected_components(edges))
 
 
 def _star_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """grouping='star' branch of dedupe_members: expand the star-parity
     grouping back to the members schema (sig columns + cluster_id/size)."""
-    sig = sig.persist()
+    sig = pin(sig)
     sig.count()
     stars = star_parity_members(sig, cfg)
     keyed = sig.withColumn("key", F.concat_ws("/", "repo", "path"))
@@ -451,10 +426,4 @@ def _star_members(sig: DataFrame, cfg: DedupeConfig) -> DataFrame:
         .agg(F.min("doc_id").alias("cluster_id"), F.count("*").alias("cluster_size"))
         .filter(F.col("cluster_size") > 1)
     )
-    members = (
-        labeled.join(stats, ["star_group"])
-        .drop("star_group")
-        .localCheckpoint(eager=True)
-    )
-    sig.unpersist()
-    return members
+    return labeled.join(stats, ["star_group"]).drop("star_group")

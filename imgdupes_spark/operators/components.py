@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imgdupes_spark.caching import checkpoint, operator, release
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
@@ -69,14 +71,12 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 MAX_ROUNDS = 50  # O(log n) in practice; hitting it means a bug, so it raises
 
 
+@operator
 def connected_components(edges: DataFrame, _stats: dict | None = None) -> DataFrame:
     """Edges (src, dst) -> labels (doc_id, cluster_id) for every node that
     appears in an edge; cluster_id = min doc_id of the component
     (deterministic across runs and parallelism levels).
     """
-    from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
-
-    spark = edges.sparkSession
     cur = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     # lazy localCheckpoint: the checksum action right after materializes it,
     # so each round is ONE Spark job (eager=True would run two), while still
@@ -85,9 +85,8 @@ def connected_components(edges: DataFrame, _stats: dict | None = None) -> DataFr
     # truncated, so nothing can recompute through the old one) — without
     # this, a 10-round run over 10^11 edges pins ten edge tables in executor
     # storage until the session ends (round-2 verdict item 2 family). The
-    # LAST checkpoint backs the returned DataFrame and stays.
-    before = persistent_rdd_ids(spark)
-    cur = cur.localCheckpoint(eager=False)
+    # LAST checkpoint backs the returned DataFrame and stays in the scope.
+    cur = checkpoint(cur, eager=False)
     # r7: no checksum of the RAW edge set — it is compared against nothing
     # (iteration 1's output is star-oriented and essentially never equals
     # the input), so the old initial checksum was one full extra pass over
@@ -95,14 +94,10 @@ def connected_components(edges: DataFrame, _stats: dict | None = None) -> DataFr
     # unconditionally "not converged"; an already-star-shaped input costs
     # one extra (cheap, small-table) round, every other input saves a job.
     prev_sum = None
-    prev_ids = persistent_rdd_ids(spark) - before
     for it in range(MAX_ROUNDS):
-        before = persistent_rdd_ids(spark)
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        prev, cur = cur, checkpoint(_small_star(_large_star(cur)), eager=False)
         cur_sum = _checksum(cur)
-        new_ids = persistent_rdd_ids(spark) - before
-        release_rdd_ids(spark, prev_ids - new_ids)
-        prev_ids = new_ids
+        release(prev)
         if cur_sum == prev_sum:
             if _stats is not None:
                 _stats["iterations"] = it + 1

@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from imgdupes_spark.caching import operator, pin
 from imgdupes_spark.config import DedupeConfig
 from imgdupes_spark.functions.fingerprints import doc_id_col, tokens_col
 
@@ -80,22 +81,20 @@ def _with_shingles(corpus: DataFrame, cfg: DedupeConfig) -> DataFrame:
     )
 
 
-def containment_edges(
-    corpus: DataFrame, cfg: DedupeConfig, caches: list | None = None
-) -> DataFrame:
+@operator
+def containment_edges(corpus: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """Edges (src, dst, origin='contain') where one doc's content is a
     verbatim proper substring of the other's. src < dst (canonical).
 
-    The tokenize+shingle projection is ALWAYS persisted once: the anchor,
+    The tokenize+shingle projection is ALWAYS pinned once: the anchor,
     container, skew-guard and verify branches otherwise each re-scan AND
-    re-tokenize the corpus — 8 full passes at 100 TB (plan-audited). With
-    ``caches`` (the pipeline path) the caller drains it after materializing
-    downstream; with ``caches=None`` (direct API calls) the result is
-    materialized here (localCheckpoint) and the cache released before
-    returning — no session-lifetime leak, no re-tokenization either way
-    (round-2 verdict item 3). The two content columns for the verify stay as
-    pruned scans (content is cheaper to re-read than to cache alongside the
-    shingle arrays).
+    re-tokenize the corpus — 8 full passes at 100 TB (plan-audited). Inside
+    a caching scope (the pipeline path) the scope releases it after the
+    consumer materializes downstream; a direct call returns the
+    materialized result and releases it before returning — no
+    session-lifetime leak, no re-tokenization either way (caching.py). The
+    two content columns for the verify stay as pruned scans (content is
+    cheaper to re-read than to cache alongside the shingle arrays).
 
     Recall bound (in addition to the mid-token and boilerplate-hot bounds in
     the module header): docs whose content has ZERO tokens (punctuation or
@@ -104,22 +103,17 @@ def containment_edges(
     contained even when it is a verbatim substring; a zero-token CONTAINER
     can only contain other zero-token docs, so nothing else is lost."""
     n_anchor = max(1, cfg.containment_anchors)
-    self_managed = caches is None
-    docs = _with_shingles(corpus, cfg)
-    light = docs.persist()
+    docs = pin(_with_shingles(corpus, cfg))
     content_cols = corpus.select(
         doc_id_col(cfg).alias("doc_id"), F.col("content")
     )
     long_d = F.col("n_tok") >= cfg.shingle_k
     # ONE job materializes the cache AND answers the short-doc probe (r7:
     # this was a count job followed by a separate isEmpty probe job)
-    probe = light.agg(
+    probe = docs.agg(
         F.count("*").alias("n"),
         F.sum((~long_d).cast("int")).alias("n_short"),
     ).collect()[0]
-    if caches is not None:
-        caches.append(light)
-    docs = light
 
     # the token-level container index costs a second corpus-wide explode —
     # build it only when the corpus actually HAS short docs (corpora of
@@ -164,10 +158,8 @@ def containment_edges(
     # the index and anchor candidacy right here — on the boilerplate-
     # adversarial corpus that removes every header shingle before the
     # cache, so the persisted relation holds only cold rows
-    cold = counted.filter(F.col("key_n") <= cfg.max_bucket_size).persist()
+    cold = pin(counted.filter(F.col("key_n") <= cfg.max_bucket_size))
     cold.count()
-    if caches is not None:
-        caches.append(cold)
 
     container = cold.select(
         F.col("did").alias("big_id"),
@@ -239,14 +231,9 @@ def containment_edges(
         .join(big_c, ["big_id"])
         .filter(F.contains(F.col("big_content"), F.col("small_content")))
     )
-    out = verified.select(
+    return verified.select(
         F.least("small_id", "big_id").alias("src"),
         F.greatest("small_id", "big_id").alias("dst"),
         F.lit(None).cast("int").alias("hamming"),
         F.lit("contain").alias("origin"),
     )
-    if self_managed:
-        out = out.localCheckpoint(eager=True)
-        light.unpersist()
-        cold.unpersist()
-    return out

@@ -16,9 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imgdupes_spark.caching import operator, pin
 from imgdupes_spark.config import DedupeConfig
 
 
+@operator
 def perceptual_hash_dedup(
     feats: DataFrame, cfg: DedupeConfig, hash_col: str, id_col: str = "asset_id"
 ) -> DataFrame:
@@ -34,41 +36,28 @@ def perceptual_hash_dedup(
     Returns (id_col, hash_col, cluster_id, cluster_size) for members of
     multi-member clusters; cluster_id = min id (text-path conventions).
     """
-    from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
     from imgdupes_spark.operators.components import connected_components
     from imgdupes_spark.operators.lsh import lsh_candidate_edges
 
-    spark = feats.sparkSession
     # NULL hashes are quarantined assets (decode failures under
     # on_error='quarantine' — see media_quarantine): never banded, never
     # cluster members, mirroring the text path's NULL-simhash quarantine
     sig = feats.filter(F.col(hash_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"), F.col(hash_col).alias("simhash")
     )
-    caches: list[DataFrame] = []
-    try:
-        edges = lsh_candidate_edges(sig, cfg, caches, ("simhash",))
-        pre_cc = persistent_rdd_ids(spark)
-        comps = connected_components(edges.select("src", "dst"))
-        cc_ids = persistent_rdd_ids(spark) - pre_cc
-        stats = (
-            comps.groupBy("cluster_id")
-            .agg(F.count("*").alias("cluster_size"))
-            .filter(F.col("cluster_size") > 1)
-        )
-        out = (
-            feats.select(F.col(id_col), hash_col)
-            .join(comps.withColumnRenamed("doc_id", id_col), [id_col])
-            .join(stats, ["cluster_id"])
-            .select(id_col, hash_col, "cluster_id", "cluster_size")
-            .localCheckpoint(eager=True)
-        )
-        release_rdd_ids(spark, cc_ids)
-        return out
-    finally:
-        # released even when edge generation or CC raises mid-way
-        for c in caches:
-            c.unpersist()
+    edges = lsh_candidate_edges(sig, cfg, ("simhash",))
+    comps = connected_components(edges.select("src", "dst"))
+    stats = (
+        comps.groupBy("cluster_id")
+        .agg(F.count("*").alias("cluster_size"))
+        .filter(F.col("cluster_size") > 1)
+    )
+    return (
+        feats.select(F.col(id_col), hash_col)
+        .join(comps.withColumnRenamed("doc_id", id_col), [id_col])
+        .join(stats, ["cluster_id"])
+        .select(id_col, hash_col, "cluster_id", "cluster_size")
+    )
 
 
 def media_quarantine(
@@ -86,6 +75,7 @@ def media_quarantine(
     )
 
 
+@operator
 def image_dedup(
     assets: DataFrame,
     cfg: DedupeConfig | None = None,
@@ -110,16 +100,16 @@ def image_dedup(
     from imgdupes_spark.sources.multimodal import extract_image_features
 
     cfg = cfg or DedupeConfig()
-    feats = extract_image_features(
-        assets, fake=fake, hash_method=cfg.image_hash_method, on_error=on_error
-    ).persist()
-    try:
-        feats.count()  # eager: scanned by band generation and final expansion
-        return perceptual_hash_dedup(feats, cfg, "phash")
-    finally:
-        feats.unpersist()
+    feats = pin(
+        extract_image_features(
+            assets, fake=fake, hash_method=cfg.image_hash_method, on_error=on_error
+        )
+    )
+    feats.count()  # eager: scanned by band generation and final expansion
+    return perceptual_hash_dedup(feats, cfg, "phash")
 
 
+@operator
 def audio_dedup(
     assets: DataFrame,
     cfg: DedupeConfig | None = None,
@@ -161,24 +151,19 @@ def audio_dedup(
     from imgdupes_spark.sources.multimodal import extract_audio_chunk_features
 
     cfg = cfg or DedupeConfig()
-    caches: list[DataFrame] = []
-    feats = extract_audio_chunk_features(
-        assets, chunk_s, hop_s, on_error=on_error, chunking=chunking
-    ).persist()
-    try:
-        return partwise_dedup(
-            feats,
-            cfg,
-            min_matched_chunks,
-            caches,
-            salt="achunk",
-            part_col="chunk_idx",
-            hash_col="chash",
-            n_col="n_chunks",
-            op="audio_dedup",
-            adaptive_min=True,
+    feats = pin(
+        extract_audio_chunk_features(
+            assets, chunk_s, hop_s, on_error=on_error, chunking=chunking
         )
-    finally:
-        for c in caches:
-            c.unpersist()
-        feats.unpersist()
+    )
+    return partwise_dedup(
+        feats,
+        cfg,
+        min_matched_chunks,
+        salt="achunk",
+        part_col="chunk_idx",
+        hash_col="chash",
+        n_col="n_chunks",
+        op="audio_dedup",
+        adaptive_min=True,
+    )

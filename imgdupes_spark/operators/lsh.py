@@ -32,12 +32,14 @@ Skew engineering (SURVEY.md §4, explicit per north_rule):
 
 from __future__ import annotations
 
+import contextvars
 from itertools import combinations
 from math import comb
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from imgdupes_spark.caching import operator, pin
 from imgdupes_spark.config import DedupeConfig
 
 
@@ -172,12 +174,15 @@ def jaccard_est(a: Column, b: Column, cfg: DedupeConfig) -> Column:
     return agree / F.lit(cfg.minhash_perms)
 
 
-def bucket_pairs(
-    bands: DataFrame, cfg: DedupeConfig, caches: list | None = None
-) -> DataFrame:
+@operator
+def bucket_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """Self-join (doc_id, bkey) rows into candidate pairs (src < dst),
     salting hot buckets. Not deduplicated: a pair sharing several buckets
     appears once per shared bucket.
+
+    The multi-member bucket rows are pinned (caching.pin) for both join
+    sides; a direct call returns the materialized pairs, a call inside a
+    caching scope the lazy plan.
 
     ``bkey`` is ONE 8-byte join key (see band_keys): the narrow 16-byte rows
     keep the dominant shuffle small.
@@ -204,12 +209,8 @@ def bucket_pairs(
     # post-filter survivors (multi-member buckets) are a small fraction of the
     # band table: cache them eagerly so the l/r self-join sides don't run the
     # window shuffle twice
-    b = b.persist()
+    b = pin(b)
     b.count()
-    if caches is not None:
-        # caller unpersists after the pair join has been materialized
-        caches.append(b)
-    self_managed = caches is None
 
     cold = b.filter(F.col("bucket_n") <= cfg.max_bucket_size)
     l, r = cold.alias("l"), cold.alias("r")
@@ -268,21 +269,11 @@ def bucket_pairs(
         )
         .dropDuplicates(["src", "dst"])
     )
-    pairs = cold_pairs.unionByName(hot_pairs)
-    if self_managed:
-        # no caches list to hand `b` to: materialize the pairs now
-        # (localCheckpoint truncates lineage off the cached band table) and
-        # release the cache before returning — a caches=None caller must not
-        # leak executor storage for the rest of the session (round-2 verdict
-        # item 2). Pipeline callers pass ``caches`` and keep the lazy plan.
-        pairs = pairs.localCheckpoint(eager=True)
-        b.unpersist()
-    return pairs
+    return cold_pairs.unionByName(hot_pairs)
 
 
-def lsh_candidate_edges(
-    rep_sig: DataFrame, cfg: DedupeConfig, caches: list | None, families: tuple
-) -> DataFrame:
+@operator
+def lsh_candidate_edges(rep_sig: DataFrame, cfg: DedupeConfig, families: tuple) -> DataFrame:
     """Verified LSH edges over (doc_id, simhash[, minhash]) rows: ONE
     self-join over the band keys of every family in ``families``, one pair
     dedup, one verify join — instead of one full pipeline per family. A pair
@@ -296,7 +287,7 @@ def lsh_candidate_edges(
     jaccard_est is NULL unless the minhash family is banded.
     """
     sim, mh = "simhash" in families, "minhash" in families
-    pairs = bucket_pairs(band_keys(rep_sig, cfg, families), cfg, caches)
+    pairs = bucket_pairs(band_keys(rep_sig, cfg, families), cfg)
     # hamming is reported for every edge; the wide minhash array is
     # re-joined only when its family is verified
     fps = ["simhash"] + (["minhash"] if mh else [])
@@ -373,18 +364,19 @@ def rep_edges(edges: DataFrame, doc_rep: DataFrame) -> DataFrame:
     )
 
 
+@operator
 def all_candidate_edges(
     sig: DataFrame,
     cfg: DedupeConfig,
     corpus: DataFrame | None = None,
     reps: DataFrame | None = None,
     doc_rep: DataFrame | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
     """Union of exact + simhash + minhash (+ containment, when the corpus is
     supplied and enabled) edge passes over the collapsed representative set,
     deduplicated on (src, dst) keeping the strongest origin
-    (exact > simhash > minhash > contain)."""
+    (exact > simhash > minhash > contain). A direct call returns the
+    materialized edges; inside a caching scope, the lazy plan."""
     if reps is None:
         reps = sha_representatives(sig)
     if doc_rep is None:
@@ -398,8 +390,8 @@ def all_candidate_edges(
     # (shingle-projection cache + short-doc probe + cold-key cache) are
     # independent of every LSH job until the final union — kick them off
     # on a driver thread so the scheduler back-fills executors while the
-    # rep_sig/band caches materialize. Spark actions are thread-safe;
-    # ``caches``.append is GIL-atomic.
+    # rep_sig/band caches materialize. Spark actions are thread-safe; the
+    # thread runs in a copy of this context, so its pins join our scope.
     contain_future = None
     pool = None
     if corpus is not None and cfg.containment_enabled:
@@ -408,12 +400,12 @@ def all_candidate_edges(
         from imgdupes_spark.operators.containment import containment_edges
 
         pool = ThreadPoolExecutor(max_workers=1)
-        contain_future = pool.submit(containment_edges, corpus, cfg, caches)
+        contain_future = pool.submit(
+            contextvars.copy_context().run, containment_edges, corpus, cfg
+        )
     try:
-        rep_sig = rep_signatures(sig, reps).persist()
+        rep_sig = pin(rep_signatures(sig, reps))
         rep_sig.count()
-        if caches is not None:
-            caches.append(rep_sig)
         # seed schema follows the configured id width (long or struct<hi,lo>)
         id_type = dict(sig.dtypes)["doc_id"]
         unioned = sig.sparkSession.createDataFrame(
@@ -424,7 +416,7 @@ def all_candidate_edges(
         families = tuple(f for f in FAMILIES if f in cfg.passes)
         if families:
             unioned = unioned.unionByName(
-                lsh_candidate_edges(rep_sig, cfg, caches, families).select(
+                lsh_candidate_edges(rep_sig, cfg, families).select(
                     "src", "dst", "hamming", "origin"
                 )
             )
@@ -433,8 +425,8 @@ def all_candidate_edges(
     finally:
         if pool is not None:
             # on an LSH error the containment thread may still be running
-            # Spark jobs and appending to ``caches``: let it finish before the
-            # caller drains them; the LSH error propagates, not the thread's
+            # Spark jobs and pinning into our scope: let it finish before the
+            # scope releases; the LSH error propagates, not the thread's
             pool.shutdown(wait=True, cancel_futures=True)
     ranked = (
         unioned

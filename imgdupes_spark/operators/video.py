@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imgdupes_spark.caching import operator, pin
 from imgdupes_spark.config import DedupeConfig
 
 # node-id derivation salts: keyspaces of the two modalities are disjoint by
@@ -85,6 +86,7 @@ def _check_node_collisions(
         )
 
 
+@operator
 def cross_modal_matches(
     assets: DataFrame,
     cfg: DedupeConfig | None = None,
@@ -116,96 +118,82 @@ def cross_modal_matches(
         "cross-modal comparability holds for the phash_org spec only "
         "(frame hashes are phash64_gray)"
     )
-    # every persist is released even when the collision guard or edge
-    # generation raises — a failed call must not pin executor storage
-    pins: list[DataFrame] = []
-    caches: list[DataFrame] = []
-    try:
-        img_feats = (
-            extract_image_features(
-                assets, hash_method=cfg.image_hash_method, on_error=on_error
-            )
-            .filter(F.col("phash").isNotNull())  # quarantined decode failures
-            .persist()
+    img_feats = pin(
+        extract_image_features(
+            assets, hash_method=cfg.image_hash_method, on_error=on_error
+        ).filter(F.col("phash").isNotNull())  # quarantined decode failures
+    )
+    vid_feats = pin(
+        extract_video_features(assets, every_s=every_s, on_error=on_error).filter(
+            F.col("phash").isNotNull()
         )
-        pins.append(img_feats)
-        vid_feats = (
-            extract_video_features(assets, every_s=every_s, on_error=on_error)
-            .filter(F.col("phash").isNotNull())
-            .persist()
-        )
-        pins.append(vid_feats)
-        # node map: (node_id, kind, asset_id, frame_idx) — a narrow (~25-byte)
-        # projection of the cached features; collision-guarded across BOTH
-        # modalities at once since they share one band index
-        nodes = img_feats.select(
-            _image_node_id().alias("node_id"),
-            F.lit("img").alias("kind"),
+    )
+    # node map: (node_id, kind, asset_id, frame_idx) — a narrow (~25-byte)
+    # projection of the cached features; collision-guarded across BOTH
+    # modalities at once since they share one band index
+    nodes = img_feats.select(
+        _image_node_id().alias("node_id"),
+        F.lit("img").alias("kind"),
+        "asset_id",
+        F.lit(None).cast("int").alias("frame_idx"),
+    ).unionByName(
+        vid_feats.select(
+            _frame_node_id().alias("node_id"),
+            F.lit("vid").alias("kind"),
             "asset_id",
-            F.lit(None).cast("int").alias("frame_idx"),
-        ).unionByName(
-            vid_feats.select(
-                _frame_node_id().alias("node_id"),
-                F.lit("vid").alias("kind"),
-                "asset_id",
-                "frame_idx",
-            )
+            "frame_idx",
         )
-        _check_node_collisions(
-            nodes, "cross_modal_matches", ["kind", "asset_id", "frame_idx"]
-        )
-        sig = img_feats.select(
+    )
+    _check_node_collisions(
+        nodes, "cross_modal_matches", ["kind", "asset_id", "frame_idx"]
+    )
+    sig = pin(
+        img_feats.select(
             _image_node_id().alias("doc_id"), F.col("phash").alias("simhash")
         ).unionByName(
             vid_feats.select(
                 _frame_node_id().alias("doc_id"), F.col("phash").alias("simhash")
             )
-        ).persist()
-        pins.append(sig)
-        sig.count()  # eager: scanned by band generation
-        edges = lsh_candidate_edges(sig, cfg, caches, ("simhash",))
-        # survivors-only re-join to recover identities; orientation of the
-        # canonical (src < dst) hash pair carries no modality information, so
-        # normalize with the kind column
-        e = edges.join(
-            nodes.select(
-                F.col("node_id").alias("src"),
-                F.col("kind").alias("src_kind"),
-                F.col("asset_id").alias("src_asset"),
-                F.col("frame_idx").alias("src_frame"),
-            ),
-            ["src"],
-        ).join(
-            nodes.select(
-                F.col("node_id").alias("dst"),
-                F.col("kind").alias("dst_kind"),
-                F.col("asset_id").alias("dst_asset"),
-                F.col("frame_idx").alias("dst_frame"),
-            ),
-            ["dst"],
         )
-        img_first = F.col("src_kind") == "img"
-        return (
-            e.filter(F.col("src_kind") != F.col("dst_kind"))
-            .select(
-                F.when(img_first, F.col("src_asset"))
-                .otherwise(F.col("dst_asset"))
-                .alias("image_asset_id"),
-                F.when(img_first, F.col("dst_asset"))
-                .otherwise(F.col("src_asset"))
-                .alias("video_asset_id"),
-                F.when(img_first, F.col("dst_frame"))
-                .otherwise(F.col("src_frame"))
-                .alias("frame_idx"),
-                "hamming",
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for c in caches + pins:
-            c.unpersist()
+    )
+    sig.count()  # eager: scanned by band generation
+    edges = lsh_candidate_edges(sig, cfg, ("simhash",))
+    # survivors-only re-join to recover identities; orientation of the
+    # canonical (src < dst) hash pair carries no modality information, so
+    # normalize with the kind column
+    e = edges.join(
+        nodes.select(
+            F.col("node_id").alias("src"),
+            F.col("kind").alias("src_kind"),
+            F.col("asset_id").alias("src_asset"),
+            F.col("frame_idx").alias("src_frame"),
+        ),
+        ["src"],
+    ).join(
+        nodes.select(
+            F.col("node_id").alias("dst"),
+            F.col("kind").alias("dst_kind"),
+            F.col("asset_id").alias("dst_asset"),
+            F.col("frame_idx").alias("dst_frame"),
+        ),
+        ["dst"],
+    )
+    img_first = F.col("src_kind") == "img"
+    return e.filter(F.col("src_kind") != F.col("dst_kind")).select(
+        F.when(img_first, F.col("src_asset"))
+        .otherwise(F.col("dst_asset"))
+        .alias("image_asset_id"),
+        F.when(img_first, F.col("dst_asset"))
+        .otherwise(F.col("src_asset"))
+        .alias("video_asset_id"),
+        F.when(img_first, F.col("dst_frame"))
+        .otherwise(F.col("src_frame"))
+        .alias("frame_idx"),
+        "hamming",
+    )
 
 
+@operator
 def video_dedup(
     assets: DataFrame,
     cfg: DedupeConfig | None = None,
@@ -226,34 +214,24 @@ def video_dedup(
     from imgdupes_spark.sources.multimodal import extract_video_features
 
     cfg = cfg or DedupeConfig()
-    caches: list[DataFrame] = []
-    feats = extract_video_features(
-        assets, every_s=every_s, on_error=on_error
-    ).persist()
-    try:
-        return partwise_dedup(
-            feats,
-            cfg,
-            min_matched_frames,
-            caches,
-            salt=_FRAME_SALT,
-            part_col="frame_idx",
-            hash_col="phash",
-            n_col="n_frames_sampled",
-            op="video_dedup",
-        )
-    finally:
-        # released even when the collision guard or edge generation raises
-        for c in caches:
-            c.unpersist()
-        feats.unpersist()
+    feats = pin(extract_video_features(assets, every_s=every_s, on_error=on_error))
+    return partwise_dedup(
+        feats,
+        cfg,
+        min_matched_frames,
+        salt=_FRAME_SALT,
+        part_col="frame_idx",
+        hash_col="phash",
+        n_col="n_frames_sampled",
+        op="video_dedup",
+    )
 
 
+@operator
 def partwise_dedup(
     feats: DataFrame,
     cfg: DedupeConfig,
     min_matched: int,
-    caches: list,
     salt: str,
     part_col: str,
     hash_col: str,
@@ -277,11 +255,9 @@ def partwise_dedup(
     Returns (asset_id, n_col, cluster_id, cluster_size) for members of
     multi-member clusters; cluster_id = min asset_id.
     """
-    from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
     from imgdupes_spark.operators.components import connected_components
     from imgdupes_spark.operators.lsh import lsh_candidate_edges
 
-    spark = feats.sparkSession
     # NULL-hash rows are quarantine sentinels (decode failures under
     # on_error='quarantine', part idx -1): excluded from banding, node ids,
     # part counts, and clustering — operators.images.media_quarantine
@@ -293,7 +269,7 @@ def partwise_dedup(
     sig = feats.select(
         node_id.alias("doc_id"), F.col(hash_col).alias("simhash")
     )
-    part_edges = lsh_candidate_edges(sig, cfg, caches, ("simhash",))
+    part_edges = lsh_candidate_edges(sig, cfg, ("simhash",))
     # part pair -> asset pair: recover (asset, part) per endpoint via the
     # survivors-only node-map join, then canonicalize the asset pair with
     # least/greatest (hash node ids carry no asset ordering). The threshold
@@ -364,19 +340,14 @@ def partwise_dedup(
     asset_edges = matched.select(
         F.col("vsrc").alias("src"), F.col("vdst").alias("dst")
     )
-    pre_cc = persistent_rdd_ids(spark)
     comps = connected_components(asset_edges)
-    cc_ids = persistent_rdd_ids(spark) - pre_cc
     stats = (
         comps.groupBy("cluster_id")
         .agg(F.count("*").alias("cluster_size"))
         .filter(F.col("cluster_size") > 1)
     )
-    out = (
+    return (
         counts.join(comps.withColumnRenamed("doc_id", "asset_id"), ["asset_id"])
         .join(stats, ["cluster_id"])
         .select("asset_id", n_col, "cluster_id", "cluster_size")
-        .localCheckpoint(eager=True)
     )
-    release_rdd_ids(spark, cc_ids)
-    return out

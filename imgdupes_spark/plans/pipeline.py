@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from imgdupes_spark import caching
 from imgdupes_spark.config import DedupeConfig
 from imgdupes_spark.functions.fingerprints import signatures
 from imgdupes_spark.operators.clusters import assign_clusters
@@ -148,7 +149,9 @@ class DedupePipeline:
             # stage never needs a count job
             rows = self._tbl(name).rows()
             return self._record(name, self._read(name), t0, resumed=True, rows=rows)
-        df, rows = self._write(name, compute())
+        # the stage's pins live until its checkpoint is written
+        with caching.scope():
+            df, rows = self._write(name, compute())
         return self._record(name, df, t0, resumed=False, rows=rows)
 
     def run(
@@ -231,36 +234,23 @@ class DedupePipeline:
                     "identities share a 64-bit doc_id — widen doc_id_col to "
                     "128 bits for this corpus size (fingerprints.doc_id_col)"
                 )
-        doc_rep = doc_rep_map(sig).persist()
-        edge_caches: list[DataFrame] = []
-        edges = self._stage(
-            "edges",
-            lambda: all_candidate_edges(
-                sig, cfg, corpus=corpus, doc_rep=doc_rep, caches=edge_caches
-            ),
-            resume,
-        )
-        # the edges checkpoint is on disk — the LSH-internal caches are dead
-        for c in edge_caches:
-            c.unpersist()
-        from imgdupes_spark.caching import persistent_rdd_ids, release_rdd_ids
-
-        pre_cc = persistent_rdd_ids(self.spark)
-        comps = self._stage(
-            "components",
-            lambda: connected_components(rep_edges(edges, doc_rep)),
-            resume,
-        )
-        # the components checkpoint is on disk — CC's in-memory final
-        # localCheckpoint (which backs its returned DataFrame) is dead
-        release_rdd_ids(self.spark, persistent_rdd_ids(self.spark) - pre_cc)
-        members = self._stage(
-            "members",
-            lambda: assign_clusters(sig, doc_rep, comps),
-            resume,
-        )
-        doc_rep.unpersist()
-        return members
+        with caching.scope():
+            doc_rep = caching.pin(doc_rep_map(sig))
+            edges = self._stage(
+                "edges",
+                lambda: all_candidate_edges(sig, cfg, corpus=corpus, doc_rep=doc_rep),
+                resume,
+            )
+            comps = self._stage(
+                "components",
+                lambda: connected_components(rep_edges(edges, doc_rep)),
+                resume,
+            )
+            return self._stage(
+                "members",
+                lambda: assign_clusters(sig, doc_rep, comps),
+                resume,
+            )
 
     def run_curation(
         self,

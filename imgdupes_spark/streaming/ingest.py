@@ -22,6 +22,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from imgdupes_spark import caching
 from imgdupes_spark.config import DedupeConfig
 from imgdupes_spark.functions.fingerprints import signatures
 from imgdupes_spark.sources.loader import CORPUS_COLUMNS
@@ -452,15 +453,13 @@ def stream_selfdedup_gate(
             novel = reps.join(hits, keys, "left_anti")
         else:
             novel = reps
-        # persist the batch result once: both sinks below consume it, and
+        # pin the batch result once: both sinks below consume it, and
         # the second must not re-probe (the first append would make its
         # own rows "already indexed")
-        novel = novel.persist()
-        try:
+        with caching.scope():
+            novel = caching.pin(novel)
             adm_tbl.append(novel.select(*keys, "sha256", "doc_id"), op)
             idx_tbl.append(novel, op)
-        finally:
-            novel.unpersist()
         _compact_index(epoch)
 
     writer = stream.writeStream.foreachBatch(_gate_batch).option(
